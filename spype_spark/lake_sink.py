@@ -806,15 +806,16 @@ _DIFF_MAX_RANGE_BUCKETS = 4096
 def _plan_range_buckets(
     old_entries: list[dict],
     new_entries: list[dict],
-    phys_key: str,
+    key: str,
     total: int,
     bucket_bytes: int,
     ebytes,
 ) -> list[tuple] | None:
     """Key-range bucket plan for one rewrite diff, or ``None`` when the
     layout is not range-routable (missing/float/mixed-type stats on the
-    first key column, or ranges overlap so much that the hash split's
-    balanced buckets are the better trade).
+    first key column ``key`` — a LOGICAL name, the name manifest entry
+    stats and null counts are keyed by — or ranges overlap so much
+    that the hash split's balanced buckets are the better trade).
 
     Returns ``[(bounds, old_idx, new_idx), ...]`` where ``bounds`` is
     the (lo, hi) slice of the key domain (None = open end; the lo=None
@@ -829,7 +830,7 @@ def _plan_range_buckets(
     import bisect
 
     def span(e):
-        st = (e.get("stats") or {}).get(phys_key)
+        st = (e.get("stats") or {}).get(key)
         if not st:
             return None
         mn, mx = st
@@ -844,7 +845,7 @@ def _plan_range_buckets(
             or all(isinstance(v, str) for v in (mn, mx))
         ):
             return None
-        nulls = (e.get("nulls") or {}).get(phys_key)
+        nulls = (e.get("nulls") or {}).get(key)
         return (mn, mx, ebytes(e), nulls)
 
     spans = []
@@ -1036,16 +1037,26 @@ def _plan_cdf_step(
         )
         # key-range routing first (r16): clustered layouts get buckets
         # whose file lists are bounded by range intersection instead of
-        # every bucket re-reading every touched file
-        inv_rename = {v2: k2 for k2, v2 in rename.items()}
-        rb = _plan_range_buckets(
-            removed + affected,
-            added + affected,
-            inv_rename.get(keys[0], keys[0]),
-            total,
-            bucket_bytes,
-            ebytes,
-        )
+        # every bucket re-reading every touched file. Entry stats are
+        # keyed by each manifest's LOGICAL names, so the route is sound
+        # only while keys[0] names the key's physical column in both
+        # manifests of the step: after a rename that frees the name for
+        # another column, that column's envelope would route the rows
+        # and drop every key outside it — hash routing there instead
+        kphys = {v2: k2 for k2, v2 in rename.items()}.get(keys[0], keys[0])
+        rb = None
+        if all(
+            mlog.col_map(mm["schema"]).get(keys[0]) == kphys
+            for mm in (prev, cur)
+        ):
+            rb = _plan_range_buckets(
+                removed + affected,
+                added + affected,
+                keys[0],
+                total,
+                bucket_bytes,
+                ebytes,
+            )
         if rb is not None:
             nb = len(rb)
             for b, (bounds, old_idx, new_idx) in enumerate(rb):

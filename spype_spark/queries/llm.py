@@ -57,14 +57,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shingling lives in the composable library surface; re-bound here for
-# the contract modules (empty-array-safe for sub-k-word docs)
-def _word_shingles(k: int = 3):
-    from spype_spark.functions import word_shingles
-
-    return word_shingles("text", k)
-
-
 # The oversized-bucket guard is part of the library surface
 # (spype_spark.functions); re-exported here for the contract modules.
 from spype_spark.functions import (  # noqa: E402

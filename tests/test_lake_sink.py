@@ -1222,6 +1222,57 @@ def test_cdf_range_bucket_planner_units(reg, tmp_path):
     assert _plan_range_buckets(old, new, "k", 800, 10_000, eb) is None
 
 
+def test_cdf_range_route_survives_rename_and_name_reuse(reg, tmp_path):
+    """Range routing reads entry stats under the key's LOGICAL name.
+    Rename the key k -> kk, add a new column that reuses the name k
+    with values far outside kk's range, then MERGE: the change feed
+    must still equal table_diff row for row (routing by the new k's
+    envelope would drop every row from the diff)."""
+    p = str(tmp_path / "t")
+    df = reg.range(4000).select(
+        F.col("id").alias("k"),
+        (F.col("id") / 500).cast("long").alias("p"),
+        (F.col("id") % 7).alias("g"),
+    )
+    lake.write_table(df, p, partition_by="p")
+    lake.rename_columns(reg, p, {"k": "kk"})  # v1
+    full = reg.range(4000).select(
+        F.col("id").alias("kk"),
+        (F.col("id") / 500).cast("long").alias("p"),
+        (F.col("id") % 7).alias("g"),
+        (F.col("id") + 100_000).alias("k"),
+    )
+    lake.merge_upsert(reg, p, full, ["kk"], evolve_schema=True)  # v2
+    upd = full.filter(F.col("kk") % 3 == 0).withColumn(
+        "g", F.col("g") + 1000
+    )
+    v = lake.merge_upsert(reg, p, upd, ["kk"])  # v3 rewrite
+    ents = mlog.m_entries(p, mlog.m_load(p, v))
+    assert all("k" in e.get("stats", {}) for e in ents), (
+        "every file must carry stats under the reused name k"
+    )
+    tot = sum(e.get("bytes", 0) for e in ents)
+    feed = (
+        reg.read.format("spype_lake")
+        .option("path", p)
+        .option("readChangeFeed", "true")
+        .option("keys", "kk")
+        .option("startingVersion", v)
+        .option("diffBucketBytes", max(1, tot // 4))
+        .load()
+        .filter(F.col("_change_type") != "update_preimage")
+        .select(
+            "kk",
+            F.regexp_replace("_change_type", "_postimage", "").alias("op"),
+        )
+    )
+    got = sorted(tuple(r) for r in feed.collect())
+    exp = sorted(
+        tuple(r) for r in lake.table_diff(reg, p, v - 1, v, ["kk"]).collect()
+    )
+    assert got == exp and len(exp) == len(range(0, 4000, 3))
+
+
 def test_cdf_pure_remove_commit_needs_no_keys(reg, tmp_path):
     """A commit that only DROPS whole files (nothing added, no kept
     file touched) is fully derivable without keys — the old side's

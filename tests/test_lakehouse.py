@@ -82,15 +82,56 @@ def test_compact_shrinks_files_preserves_content(spark, tmp_path):
     )
 
 
-def test_uncommitted_snapshot_invisible(spark, tbl, tmp_path):
-    # simulate a failed write: version dir without _SUCCESS
+_NON_TABLE_VERBS = {
+    "read_table": lambda s, p, kv: lake.read_table(s, p),
+    "scan_table": lambda s, p, kv: lake.scan_table(s, p, ranges={"k": (0, 1)}),
+    "merge_upsert": lambda s, p, kv: lake.merge_upsert(s, p, kv, ["k"]),
+    "delete_where": lambda s, p, kv: lake.delete_where(s, p, F.col("k") == 1),
+    "update_where": lambda s, p, kv: lake.update_where(
+        s, p, F.col("k") == 1, {"v": F.lit(0)}
+    ),
+    "append_table": lambda s, p, kv: lake.append_table(s, p, kv),
+    "delete_keys": lambda s, p, kv: lake.delete_keys(s, p, kv.select("k")),
+    "delete_range": lambda s, p, kv: lake.delete_range(s, p, "k", 0, 1),
+    "compact": lambda s, p, kv: lake.compact(s, p),
+    "restore_table": lambda s, p, kv: lake.restore_table(s, p, 0),
+    "widen_types": lambda s, p, kv: lake.widen_types(s, p, {"k": "bigint"}),
+    "rename_columns": lambda s, p, kv: lake.rename_columns(s, p, {"k": "j"}),
+    "create_branch": lambda s, p, kv: lake.create_branch(p, "b"),
+    "clone_table": lambda s, p, kv: lake.clone_table(p, p + "_clone"),
+}
+
+
+@pytest.mark.parametrize("layout", ["empty", "snapshot_dirs"])
+@pytest.mark.parametrize("verb", sorted(_NON_TABLE_VERBS))
+def test_non_table_fails_loudly(spark, tmp_path, verb, layout):
+    """A directory without ``_manifests/`` is not a table: every verb
+    raises (FileNotFoundError, or a ValueError naming the path) and
+    writes nothing — on an empty directory and on a ``v=0/`` snapshot
+    directory layout (parquet + ``_SUCCESS``) that carries no
+    manifest."""
     import os
 
-    os.makedirs(f"{tbl}/v=1")
-    assert lake.versions(tbl) == [0]
-    assert lake.latest_version(tbl) == 0
-    with pytest.raises(FileNotFoundError):
-        lake.read_table(spark, tbl, version=1)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nt")
+    os.makedirs(path)
+    if layout == "snapshot_dirs":
+        os.makedirs(os.path.join(path, "v=0"))
+        pq.write_table(
+            pa.table({"k": pa.array([1], pa.int32()), "v": [10]}),
+            os.path.join(path, "v=0", "part-0.parquet"),
+        )
+        open(os.path.join(path, "v=0", "_SUCCESS"), "w").close()
+    before = sorted(os.walk(path))
+    kv = spark.createDataFrame([(1, 10)], "k int, v long")
+    with pytest.raises((FileNotFoundError, ValueError)) as ei:
+        _NON_TABLE_VERBS[verb](spark, path, kv)
+    if ei.type is ValueError:
+        assert path in str(ei.value)
+    assert sorted(os.walk(path)) == before, "a failed verb wrote files"
+    assert not os.path.exists(path + "_clone")
 
 
 def test_history_counts_files(spark, tbl):
@@ -120,25 +161,6 @@ def test_merge_schema_evolution(spark, tbl):
     }
     # v0 untouched: time travel still shows the pre-evolution schema
     assert "region" not in lake.read_table(spark, tbl, version=0).columns
-
-
-def test_concurrent_commit_exactly_one_wins(spark, tbl):
-    """The atomic-rename commit layer: two snapshots prepared against
-    the same base — exactly one rename wins v=1; the loser raises
-    ConcurrentWriteError, leaves no temp debris, and never touches the
-    winning snapshot."""
-    import os
-
-    df = lake.read_table(spark, tbl)
-    tbl = str(tbl) + "_posix"
-    lake.write_table(df, tbl, protocol="posix")
-    assert lake._commit_snapshot(df, tbl, 1) == 1
-    before = sorted(os.listdir(f"{tbl}/v=1"))
-    with pytest.raises(lake.ConcurrentWriteError):
-        lake._commit_snapshot(df.filter(F.col("k") == 1), tbl, 1)
-    assert lake.versions(tbl) == [0, 1]
-    assert sorted(os.listdir(f"{tbl}/v=1")) == before  # winner untouched
-    assert not [d for d in os.listdir(tbl) if d.startswith(".tmp-")]
 
 
 def test_two_writer_merge_race_serializes_or_fails_clean(spark, tbl):
@@ -286,9 +308,8 @@ _op = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(_op, min_size=1, max_size=4))
-@pytest.mark.parametrize("protocol", ["manifest", "posix"])
 def test_lakehouse_random_op_sequences_match_model(
-    spark, tmp_path_factory, protocol, ops
+    spark, tmp_path_factory, ops
 ):
     import shutil as _sh
     import tempfile as _tf
@@ -298,7 +319,7 @@ def test_lakehouse_random_op_sequences_match_model(
     try:
         model: dict[int, tuple[int, int]] = {0: (1, 5)}
         df0 = spark.createDataFrame([(0, 1, 5)], "k long, v long, ts long")
-        lake.write_table(df0, path, protocol=protocol)
+        lake.write_table(df0, path)
         snapshots = [dict(model)]
         for kind, arg in ops:
             if kind == "upsert":
@@ -366,31 +387,33 @@ def test_lakehouse_random_op_sequences_match_model(
 # ---------------------------------------------------------------------------
 
 
-def _mk_part_table(spark, tmp_path, name="pt", protocol="manifest"):
+def _mk_part_table(spark, tmp_path, name="pt"):
     path = str(tmp_path / name)
     df = spark.createDataFrame(
         [(k, k * 10, k % 3) for k in range(9)], "k long, v long, p long"
     )
-    lake.write_table(df, path, partition_by="p", protocol=protocol)
+    lake.write_table(df, path, partition_by="p")
     return path
 
 
-def _inodes(path, version, part):
-    import os
-
-    d = os.path.join(path, f"v={version}", f"p={part}")
+def _part_files(path, version, **part):
+    """Data files of one version whose recorded partition tuple matches
+    ``part`` — the unit copy-on-write carry is asserted on: a carried
+    file keeps its exact path in the next manifest."""
+    m = lake._m_load(path, version)
     return {
-        f: os.stat(os.path.join(d, f)).st_ino
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
+        e["path"]
+        for e in lake._m_entries(path, m)
+        if all(str(e["partition"].get(c)) == str(v) for c, v in part.items())
     }
 
 
 def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
     """A merge whose updates land in (and match keys only in) p=1 must
-    hardlink p=0 and p=2 unchanged — same inodes as the base snapshot —
-    while p=1 is fresh files. Content equals the full-rewrite answer."""
-    path = _mk_part_table(spark, tmp_path, protocol="posix")
+    carry p=0 and p=2 unchanged — the base version's files, by
+    reference — while p=1 is fresh files. Content equals the
+    full-rewrite answer."""
+    path = _mk_part_table(spark, tmp_path)
     upd = spark.createDataFrame([(1, 111, 1), (10, 100, 1)], "k long, v long, p long")
     lake.merge_upsert(spark, path, upd, keys=["k"])
     got = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
@@ -400,47 +423,46 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
     }
     assert got == want
     for part in (0, 2):  # untouched: shared files by reference
-        assert _inodes(path, 1, part) == _inodes(path, 0, part), part
-    # touched partition: rewritten, no inode shared with the base
-    assert not (
-        set(_inodes(path, 1, 1).values()) & set(_inodes(path, 0, 1).values())
-    )
+        assert _part_files(path, 1, p=part) == _part_files(path, 0, p=part)
+    # touched partition: rewritten, no file shared with the base
+    assert not (_part_files(path, 1, p=1) & _part_files(path, 0, p=1))
 
 
 def test_partitioned_merge_cross_partition_key_move(spark, tmp_path):
     """An update that MOVES a key to another partition must rewrite
     BOTH the old and new partitions (no stale duplicate left behind)."""
-    path = _mk_part_table(spark, tmp_path, protocol="posix")
+    path = _mk_part_table(spark, tmp_path)
     upd = spark.createDataFrame([(0, 999, 2)], "k long, v long, p long")
     lake.merge_upsert(spark, path, upd, keys=["k"])
     got = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
     want = {(k, k * 10, k % 3) for k in range(1, 9)} | {(0, 999, 2)}
     assert got == want  # exactly one row for k=0, in its new partition
-    # p=1 untouched; p=0 (old home) and p=2 (new home) both rewritten
-    assert _inodes(path, 1, 1) == _inodes(path, 0, 1)
+    # p=1 untouched: every file carried by reference
+    assert _part_files(path, 1, p=1) == _part_files(path, 0, p=1)
 
 
 def test_partitioned_delete_drops_partition_and_links_rest(spark, tmp_path):
-    import os
-
-    path = _mk_part_table(spark, tmp_path, protocol="posix")
+    path = _mk_part_table(spark, tmp_path)
     lake.delete_where(spark, path, F.col("p") == 2)
     got = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
     assert got == {(k, k * 10, k % 3) for k in range(9) if k % 3 != 2}
-    assert not os.path.isdir(os.path.join(path, "v=1", "p=2"))
+    assert not _part_files(path, 1, p=2)
     for part in (0, 1):
-        assert _inodes(path, 1, part) == _inodes(path, 0, part)
+        assert _part_files(path, 1, p=part) == _part_files(path, 0, p=part)
     # time travel still sees the deleted partition in v=0
     assert lake.read_table(spark, path, version=0).count() == 9
 
 
 def test_partitioned_compact_and_history(spark, tmp_path):
-    path = _mk_part_table(spark, tmp_path, protocol="posix")
+    path = _mk_part_table(spark, tmp_path)
     lake.compact(spark, path, target_files=1)
     got = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
     assert got == {(k, k * 10, k % 3) for k in range(9)}
-    files = lake.data_files(path, 1)
-    assert files and all(f.startswith("p=") for f in files)
+    # the compacted version keeps the partition layout: every file
+    # records one p value, and one file per partition
+    assert lake.data_files(path, 1)
+    for part in (0, 1, 2):
+        assert len(_part_files(path, 1, p=part)) == 1, part
 
 
 @pytest.mark.slow
@@ -450,16 +472,15 @@ def test_partitioned_compact_and_history(spark, tmp_path):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(_op, min_size=1, max_size=4))
-@pytest.mark.parametrize("protocol", ["manifest", "posix"])
 def test_partitioned_lakehouse_sequences_match_model(
-    spark, tmp_path_factory, protocol, ops
+    spark, tmp_path_factory, ops
 ):
     """The model-based fuzz re-run against a PARTITIONED table
-    (p = k % 3, partition-level copy-on-write active), under BOTH
-    commit protocols: every operation sequence and every time-travel
-    snapshot must match the same pure-Python model the unpartitioned
-    table matches — COW (by manifest reference or by hardlink) is a
-    storage optimization, never a semantics change."""
+    (p = k % 3, partition-level copy-on-write active): every operation
+    sequence and every time-travel snapshot must match the same
+    pure-Python model the unpartitioned table matches — COW (carry by
+    manifest reference) is a storage optimization, never a semantics
+    change."""
     import shutil as _sh
     import tempfile as _tf
 
@@ -470,7 +491,7 @@ def test_partitioned_lakehouse_sequences_match_model(
         df0 = spark.createDataFrame(
             [(0, 1, 5, 0)], "k long, v long, ts long, p long"
         )
-        lake.write_table(df0, path, partition_by="p", protocol=protocol)
+        lake.write_table(df0, path, partition_by="p")
         snapshots = [dict(model)]
         for kind, arg in ops:
             if kind in ("upsert", "upsert_ts"):
@@ -531,17 +552,15 @@ def test_partitioned_lakehouse_sequences_match_model(
 
 def test_multicolumn_partitioned_cow(spark, tmp_path):
     """Two-level (d, s) partitioning — the date+shard layout SCALE.md
-    assumes at 100 TB: a merge touching only (d=1, s=0) must hardlink
+    assumes at 100 TB: a merge touching only (d=1, s=0) must carry
     every OTHER leaf partition (including d=1's other shard) and
     rewrite exactly the touched leaf."""
-    import os
-
     path = str(tmp_path / "mt")
     df = spark.createDataFrame(
         [(k, k * 10, k % 2, k % 3) for k in range(12)],
         "k long, v long, d long, s long",
     )
-    lake.write_table(df, path, partition_by=["d", "s"], protocol="posix")
+    lake.write_table(df, path, partition_by=["d", "s"])
     # k=3 → (d=1, s=0); update stays in its own leaf
     upd = spark.createDataFrame([(3, 999, 1, 0)], "k long, v long, d long, s long")
     lake.merge_upsert(spark, path, upd, keys=["k"])
@@ -551,48 +570,36 @@ def test_multicolumn_partitioned_cow(spark, tmp_path):
     }
     assert got == want
 
-    def leaf_inodes(ver, d, sh):
-        p = os.path.join(path, f"v={ver}", f"d={d}", f"s={sh}")
-        return {
-            f: os.stat(os.path.join(p, f)).st_ino
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        }
+    def leaf(ver, d, sh):
+        return _part_files(path, ver, d=d, s=sh)
 
     for d, sh in [(0, 0), (0, 1), (0, 2), (1, 1), (1, 2)]:
-        assert leaf_inodes(1, d, sh) == leaf_inodes(0, d, sh), (d, sh)
+        assert leaf(1, d, sh) == leaf(0, d, sh), (d, sh)
     # the touched leaf is rewritten at FILE granularity: at least one
     # fresh file (the rewrite output) exists; base files whose key
-    # stats can't contain k=3 may legitimately carry over by hardlink
-    v1, v0 = leaf_inodes(1, 1, 0), leaf_inodes(0, 1, 0)
-    assert set(v1.values()) - set(v0.values()), "no rewritten file in touched leaf"
-    # delete an entire date: both its shards go, the other date links
+    # stats can't contain k=3 may legitimately carry over
+    assert leaf(1, 1, 0) - leaf(0, 1, 0), "no rewritten file in touched leaf"
+    # delete an entire date: both its shards go, the other date carries
     lake.delete_where(spark, path, F.col("d") == 0)
-    assert not os.path.isdir(os.path.join(path, "v=2", "d=0"))
+    assert not _part_files(path, 2, d=0)
     assert lake.read_table(spark, path).filter("d = 0").count() == 0
     for d, sh in [(1, 1), (1, 2)]:
-        assert leaf_inodes(2, d, sh) == leaf_inodes(1, d, sh), (d, sh)
+        assert leaf(2, d, sh) == leaf(1, d, sh), (d, sh)
 
 
 def test_file_level_manifest_pruning(spark, tmp_path):
     """File-granularity copy-on-write inside a touched partition: the
     base is written as 4 range-clustered files per partition (disjoint
-    key intervals in the parquet footers); a merge keyed in one narrow
-    range must hardlink every file whose interval can't contain the
-    keys and rewrite only the possibly-matching one. Content equals
-    the full-rewrite answer."""
-    import os
-
+    key intervals in the manifest stats); a merge keyed in one narrow
+    range must carry every file whose interval can't contain the keys
+    and rewrite only the possibly-matching one. Content equals the
+    full-rewrite answer."""
     path = str(tmp_path / "flt")
     df = spark.createDataFrame(
         [(k, k * 10, 0) for k in range(400)], "k long, v long, p long"
     )
-    lake.write_table(
-        df.repartitionByRange(4, "k"), path, partition_by="p",
-        protocol="posix",
-    )
-    base_dir = os.path.join(path, "v=0", "p=0")
-    base_files = sorted(f for f in os.listdir(base_dir) if f.endswith(".parquet"))
+    lake.write_table(df.repartitionByRange(4, "k"), path, partition_by="p")
+    base_files = _part_files(path, 0, p=0)
     assert len(base_files) == 4  # one file per key range
 
     upd = spark.createDataFrame(
@@ -606,33 +613,28 @@ def test_file_level_manifest_pruning(spark, tmp_path):
     }
     assert got == want
 
-    def inode(ver, f):
-        return os.stat(os.path.join(path, f"v={ver}", "p=0", f)).st_ino
-
-    v1_dir = os.path.join(path, "v=1", "p=0")
-    v1_files = sorted(f for f in os.listdir(v1_dir) if f.endswith(".parquet"))
-    base_inodes = {inode(0, f) for f in base_files}
-    linked = [f for f in v1_files if inode(1, f) in base_inodes]
-    fresh = [f for f in v1_files if inode(1, f) not in base_inodes]
+    v1_files = _part_files(path, 1, p=0)
+    linked, fresh = v1_files & base_files, v1_files - base_files
     # keys 5 and 7 live in ONE of the four range files → exactly 3 of
-    # the base files carry over by hardlink, plus fresh rewrite output
+    # the base files carry over by reference, plus fresh rewrite output
     assert len(linked) == 3, (linked, fresh)
     assert fresh
 
 
 def test_vacuum_respects_hardlinked_carries(spark, tmp_path):
-    """VACUUM drops old snapshots; data files shared with surviving
-    snapshots via COW hardlinks must remain readable (the filesystem
-    refcounts them), and time travel to a vacuumed version raises."""
+    """VACUUM drops old versions; data files the surviving version
+    carries by reference from a dropped one must remain readable (GC
+    counts references by path), and time travel to a vacuumed version
+    raises."""
     path = _mk_part_table(spark, tmp_path, name="vac")
     upd = spark.createDataFrame([(1, 111, 1)], "k long, v long, p long")
-    lake.merge_upsert(spark, path, upd, keys=["k"])  # v1: p=0/p=2 linked
+    lake.merge_upsert(spark, path, upd, keys=["k"])  # v1: p=0/p=2 carried
     before = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
     removed = lake.vacuum(path, keep_last=1)
     assert removed == [0]
     assert lake.versions(path) == [1]
     after = {(r.k, r.v, r.p) for r in lake.read_table(spark, path).collect()}
-    assert after == before  # linked files survived their origin snapshot
+    assert after == before  # carried files survived their origin version
     import pytest as _pt
 
     with _pt.raises(FileNotFoundError):
@@ -641,20 +643,16 @@ def test_vacuum_respects_hardlinked_carries(spark, tmp_path):
 
 def test_delete_range_prunes_files_and_matches_delete_where(spark, tmp_path):
     """delete_range must (a) equal delete_where(col BETWEEN lo AND hi)
-    row-for-row, and (b) hardlink every data file whose footer interval
+    row-for-row, and (b) carry every data file whose recorded interval
     misses the deleted range — on partitioned AND unpartitioned tables."""
-    import os
-
     # partitioned: 4 range-clustered files inside p=0
     path = str(tmp_path / "dr")
     df = spark.createDataFrame(
         [(k, k * 10, 0) for k in range(400)], "k long, v long, p long"
     )
-    lake.write_table(df.repartitionByRange(4, "k"), path, partition_by="p",
-                     protocol="posix")
+    lake.write_table(df.repartitionByRange(4, "k"), path, partition_by="p")
     twin = str(tmp_path / "dr_twin")
-    lake.write_table(df.repartitionByRange(4, "k"), twin, partition_by="p",
-                     protocol="posix")
+    lake.write_table(df.repartitionByRange(4, "k"), twin, partition_by="p")
 
     lake.delete_range(spark, path, "k", 10, 20)
     lake.delete_where(spark, twin, F.col("k").between(10, 20))
@@ -662,44 +660,31 @@ def test_delete_range_prunes_files_and_matches_delete_where(spark, tmp_path):
     want = {(r.k, r.v) for r in lake.read_table(spark, twin).collect()}
     assert got == want == {(k, k * 10) for k in range(400) if not 10 <= k <= 20}
 
-    def inodes(tbl, ver):
-        d = os.path.join(tbl, f"v={ver}", "p=0")
-        return {os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d) if f.endswith(".parquet")}
+    shared = _part_files(path, 1, p=0) & _part_files(path, 0, p=0)
+    assert len(shared) == 3, "3 of 4 range files must carry by reference"
 
-    shared = inodes(path, 1) & inodes(path, 0)
-    assert len(shared) == 3, "3 of 4 range files must carry by hardlink"
-
-    # unpartitioned: same pruning across the snapshot root
+    # unpartitioned: same pruning across the whole table
     flat = str(tmp_path / "dr_flat")
-    lake.write_table(df.select("k", "v").repartitionByRange(4, "k"), flat,
-                     protocol="posix")
+    lake.write_table(df.select("k", "v").repartitionByRange(4, "k"), flat)
     lake.delete_range(spark, flat, "k", 390, 600)
     got_flat = {(r.k, r.v) for r in lake.read_table(spark, flat).collect()}
     assert got_flat == {(k, k * 10) for k in range(390)}
-
-    def flat_inodes(ver):
-        d = os.path.join(flat, f"v={ver}")
-        return {os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d) if f.endswith(".parquet")}
-
-    assert len(flat_inodes(1) & flat_inodes(0)) == 3
+    f0, f1 = set(lake.data_files(flat, 0)), set(lake.data_files(flat, 1))
+    assert len(f0 & f1) == 3
 
 
 def test_string_partition_values_round_trip_typed(spark, tmp_path):
     """Regression (round-8 ADVICE, high): a STRING partition column with
     numeric-looking values ('001', '002') must round-trip typed — the
-    per-snapshot _schema.json bypasses partition-discovery inference, so
-    '001' stays the string '001' instead of becoming int 1, and the COW
-    touched-partition matcher rewrites the real p=001 directory instead
-    of carrying it stale and inventing a p=1 twin."""
-    import os
-
+    per-version manifest schema bypasses partition-discovery inference,
+    so '001' stays the string '001' instead of becoming int 1, and the
+    COW touched-partition matcher rewrites the real p=001 files instead
+    of carrying them stale and inventing a p=1 twin."""
     path = str(tmp_path / "strp")
     df = spark.createDataFrame(
         [(1, "001"), (2, "001"), (3, "002")], "k long, p string"
     )
-    lake.write_table(df, path, partition_by="p", protocol="posix")
+    lake.write_table(df, path, partition_by="p")
     rt = lake.read_table(spark, path)
     assert dict(rt.dtypes)["p"] == "string"
     assert rows(rt.select("k", "p")) == {(1, "001"), (2, "001"), (3, "002")}
@@ -710,17 +695,15 @@ def test_string_partition_values_round_trip_typed(spark, tmp_path):
         "deleted row resurrected or survivor duplicated — the pre-fix "
         "repro returned [(1,'1'),(2,'1'),(2,'1'),(3,'2')]"
     )
-    v1_dirs = {
-        d for d in os.listdir(os.path.join(path, "v=1"))
-        if d.startswith("p=")
-    }
-    assert v1_dirs == {"p=001", "p=002"}, f"phantom partition dir: {v1_dirs}"
+    m1 = lake._m_load(path, 1)
+    v1_parts = {e["partition"]["p"] for e in lake._m_entries(path, m1)}
+    assert v1_parts == {"001", "002"}, f"phantom partition: {v1_parts}"
 
 
 def test_boolean_partition_values_round_trip_typed(spark, tmp_path):
     """Boolean partition columns read back boolean (not string) thanks
-    to the persisted snapshot schema; mutations stay correct (_cow_plan
-    bails to full rewrite on the 'True' vs 'true' spelling gap — the
+    to the persisted manifest schema; mutations stay correct
+    (_m_cow_entries bails to full rewrite on the 'True' vs 'true' spelling gap — the
     normalization clash check — rather than mismatching)."""
     path = str(tmp_path / "boolp")
     df = spark.createDataFrame(
@@ -747,7 +730,7 @@ def test_delete_range_uncomparable_bounds_fall_back(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Manifest protocol (default): object-store-portable structure
+# Manifest layout: object-store-portable structure
 # ---------------------------------------------------------------------------
 
 
@@ -777,7 +760,7 @@ def test_manifest_cow_carries_by_reference(spark, tmp_path):
     by_path = {e["path"]: e for e in m1["files"]}
     for pth in f1 - f0:
         assert pth not in f0  # fresh files only in the new commit dir
-    # v=N snapshot dirs must NOT exist (nothing posix about the layout)
+    # no per-version snapshot dirs: versions live in _manifests/ only
     import os
 
     assert not os.path.isdir(os.path.join(path, "v=0"))
@@ -835,6 +818,8 @@ def test_manifest_interrupted_commit_never_half_publishes(spark, tmp_path):
         lake._m_publish = real_publish
     assert calls["n"] == 1
     assert lake.versions(path) == [0]
+    with pytest.raises(FileNotFoundError):
+        lake.read_table(spark, path, version=1)
     assert {tuple(r) for r in lake.read_table(spark, path).collect()} == {
         (1, "a"), (2, "b")
     }
@@ -1082,33 +1067,17 @@ def test_manifest_scan_table_prunes_files_and_matches_filter(spark, tmp_path):
     }
     assert len(set(both.inputFiles())) < len(all_files)
 
-    # posix tables: same semantics through the fallback path
-    pos = str(tmp_path / "scan_posix")
-    lake.write_table(
-        df.repartitionByRange(4, "k"), pos, partition_by="p",
-        protocol="posix",
-    )
-    got_pos = {
-        tuple(r)
-        for r in lake.scan_table(
-            spark, pos, partitions={"p": [0, 2]}, ranges={"k": (100, 140)}
-        ).collect()
-    }
-    assert got_pos == {tuple(r) for r in naive.collect()}
-
 
 def test_string_key_file_pruning_both_protocols(spark, tmp_path):
     """String min/max footer/manifest stats are sound prune material
     (possibly-truncated parquet string stats are still valid BOUNDS —
     min truncates down, max truncates up per the spec), so range
     deletes and reader scans on a STRING key must skip files whose
-    recorded interval misses the bounds, on both protocols."""
-    import os
-
+    recorded interval misses the bounds."""
     rows = [(f"doc{k:04d}", k) for k in range(400)]
 
-    # manifest protocol: delete_range carries non-matching files by
-    # reference, scan_table cuts the file list from the manifest alone
+    # delete_range carries non-matching files by reference, scan_table
+    # cuts the file list from the manifest alone
     path = str(tmp_path / "strprune")
     df = spark.createDataFrame(rows, "id string, v long")
     lake.write_table(df.repartitionByRange(4, "id"), path)
@@ -1123,21 +1092,12 @@ def test_string_key_file_pruning_both_protocols(spark, tmp_path):
     assert len(f0 & f1) == 3, "3 of 4 string-range files must carry"
     got = {r.id for r in lake.read_table(spark, path).collect()}
     assert got == {f"doc{k:04d}" for k in range(400) if not 10 <= k <= 20}
-
-    # posix protocol: the same split comes from parquet footer stats,
-    # carried files are hardlinks of the base version's inodes
-    pos = str(tmp_path / "strprune_posix")
-    lake.write_table(df.repartitionByRange(4, "id"), pos, protocol="posix")
-    lake.delete_range(spark, pos, "id", "doc0390", "doc9999")
-
-    def inodes(ver):
-        d = os.path.join(pos, f"v={ver}")
-        return {os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d) if f.endswith(".parquet")}
-
-    assert len(inodes(1) & inodes(0)) == 3
-    got_pos = {r.id for r in lake.read_table(spark, pos).collect()}
-    assert got_pos == {f"doc{k:04d}" for k in range(390)}
+    # an interval open past the max touches only the last range file
+    lake.delete_range(spark, path, "id", "doc0390", "doc9999")
+    f2 = set(lake.data_files(path, 2))
+    assert len(f1 - f2) == 1, "only the last string-range file rewrites"
+    got = {r.id for r in lake.read_table(spark, path).collect()}
+    assert got == {f"doc{k:04d}" for k in range(390) if not 10 <= k <= 20}
 
 
 def test_manifest_parts_content_addressed_carry(spark, tmp_path, monkeypatch):
@@ -1438,27 +1398,18 @@ def test_delete_keys_merge_on_read_sequence_semantics(spark, tmp_path):
     assert {r.k for r in lake.read_table(spark, path).collect()} == got4
 
 
-def test_delete_keys_posix_fallback_and_multi_key(spark, tmp_path):
-    """Posix tables fall back to the anti-join rewrite (same rows);
-    multi-column key tuples match as tuples, not independently."""
-    pos = str(tmp_path / "mor_posix")
+def test_delete_keys_multi_key_matches_tuples(spark, tmp_path):
+    """Multi-column key tuples match as tuples, not independently."""
+    path = str(tmp_path / "mor_multi")
     df = spark.createDataFrame(
         [(k, k % 3, k * 10) for k in range(100)], "a long, b long, v long"
     )
-    lake.write_table(df, pos, protocol="posix")
+    lake.write_table(df, path)
     kd = spark.createDataFrame([(1, 1), (2, 2)], "a long, b long")
-    lake.delete_keys(spark, pos, kd)
-    got = {(r.a, r.b) for r in lake.read_table(spark, pos).collect()}
-    assert (1, 1) not in got and (2, 2) not in got
-    assert (1, 0) not in df.columns  # noqa: just clarity
+    lake.delete_keys(spark, path, kd)
+    got = {(r.a, r.b) for r in lake.read_table(spark, path).collect()}
+    assert got == {(k, k % 3) for k in range(100)} - {(1, 1), (2, 2)}
     assert (4, 1) in got and (5, 2) in got, "tuple match, not per-column"
-
-    # manifest table, same multi-key semantics via the MOR path
-    man = str(tmp_path / "mor_multi")
-    lake.write_table(df, man)
-    lake.delete_keys(spark, man, kd)
-    got_m = {(r.a, r.b) for r in lake.read_table(spark, man).collect()}
-    assert got_m == got
 
 
 def test_txn_delete_keys_through_catalog(spark, tmp_path):
@@ -1494,25 +1445,24 @@ def test_update_where_both_protocols_and_txn(spark, tmp_path):
     updates move rows, and the catalog txn path matches."""
     from spype_spark.catalog import Catalog
 
-    for proto in ("manifest", "posix"):
-        path = str(tmp_path / f"upd_{proto}")
-        df = spark.createDataFrame(
-            [(1, 10, 20, 0), (2, 30, 40, 1), (3, None, 60, 0)],
-            "k long, a long, b long, p long",
-        )
-        lake.write_table(df, path, partition_by="p", protocol=proto)
-        # swap a and b where a > 5: RHS must read PRE-update values
-        lake.update_where(
-            spark, path, F.col("a") > 5,
-            {"a": F.col("b"), "b": F.col("a")},
-        )
-        got = {(r.k, r.a, r.b) for r in lake.read_table(spark, path).collect()}
-        assert got == {(1, 20, 10), (2, 40, 30), (3, None, 60)}, proto
-        # NULL predicate row (k=3, a NULL) untouched; time travel intact
-        assert {(r.k, r.a) for r in
-                lake.read_table(spark, path, version=0).collect()} == {
-            (1, 10), (2, 30), (3, None)
-        }
+    path = str(tmp_path / "upd")
+    df = spark.createDataFrame(
+        [(1, 10, 20, 0), (2, 30, 40, 1), (3, None, 60, 0)],
+        "k long, a long, b long, p long",
+    )
+    lake.write_table(df, path, partition_by="p")
+    # swap a and b where a > 5: RHS must read PRE-update values
+    lake.update_where(
+        spark, path, F.col("a") > 5,
+        {"a": F.col("b"), "b": F.col("a")},
+    )
+    got = {(r.k, r.a, r.b) for r in lake.read_table(spark, path).collect()}
+    assert got == {(1, 20, 10), (2, 40, 30), (3, None, 60)}
+    # NULL predicate row (k=3, a NULL) untouched; time travel intact
+    assert {(r.k, r.a) for r in
+            lake.read_table(spark, path, version=0).collect()} == {
+        (1, 10), (2, 30), (3, None)
+    }
 
     # manifest: only the touched partition's entries rewrite
     path = str(tmp_path / "upd_cow")
@@ -1697,10 +1647,6 @@ def test_branch_creation_errors(spark, tmp_path):
         lake.create_branch(path, "bad/name")
     with pytest.raises(ValueError, match="itself a branch"):
         lake.create_branch(lake.branch_path(path, "dup"), "nested")
-    posix = str(tmp_path / "px")
-    lake.write_table(_kv(spark, [(1, "a", 0)]), posix, protocol="posix")
-    with pytest.raises(ValueError, match="manifest-protocol"):
-        lake.create_branch(posix, "b")
 
 
 def test_scan_table_null_pruning(spark, tmp_path):
@@ -1828,11 +1774,6 @@ def test_delete_predicate_carries_refuted_files(spark, tmp_path):
     gone = {k for k in range(400)
             if (k % 4 == 1 and k < 40) or (k % 4 == 2 and 300 <= k <= 320)}
     assert kept == set(range(400)) - gone
-    # posix fallback gives the same rows
-    px = str(tmp_path / "px")
-    lake.write_table(df, px, partition_by="p", protocol="posix")
-    lake.delete_predicate(spark, px, pred)
-    assert {r.k for r in lake.read_table(spark, px).collect()} == kept
 
 
 def test_append_table_zero_rewrite_and_incremental_scan(spark, tmp_path):
@@ -1862,13 +1803,6 @@ def test_append_table_zero_rewrite_and_incremental_scan(spark, tmp_path):
     with pytest.raises(ValueError, match="append schema"):
         lake.append_table(
             spark, path, spark.createDataFrame([(1,)], "k long"))
-    # posix: full-rewrite fallback keeps rows; since= raises
-    px = str(tmp_path / "px")
-    lake.write_table(_kv(spark, [(1, "a", 0)]), px, protocol="posix")
-    lake.append_table(spark, px, _kv(spark, [(2, "b", 0)]))
-    assert {r.k for r in lake.read_table(spark, px).collect()} == {1, 2}
-    with pytest.raises(ValueError, match="manifest commit-sequence"):
-        lake.scan_table(spark, px, since=0)
 
 
 @settings(max_examples=300, deadline=None,
@@ -2557,13 +2491,6 @@ def test_rename_drop_rejections(spark, tmp_path):
         lake.drop_columns(spark, path2, ["x"])
     lake.compact(spark, path2)
     assert lake.rename_columns(spark, path2, {"x": "y"}) >= 3
-    # posix tables reject
-    path3 = str(tmp_path / "t3")
-    lake.write_table(
-        spark.createDataFrame([(1,)], "k int"), path3, protocol="posix"
-    )
-    with pytest.raises(ValueError, match="manifest"):
-        lake.rename_columns(spark, path3, {"k": "j"})
 
 
 def test_catalog_txn_inherits_column_mapping(spark, tmp_path):
@@ -2767,17 +2694,6 @@ def test_restore_is_metadata_only_and_preserves_history(spark, tbl):
     }
 
 
-def test_restore_posix_protocol(spark, tmp_path):
-    df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
-    path = str(tmp_path / "ptbl")
-    lake.write_table(df, path, protocol="posix")
-    lake.delete_where(spark, path, F.col("k") == 1)         # v1
-    v = lake.restore_table(spark, path, 0)                  # v2
-    assert v == 2
-    assert rows(lake.read_table(spark, path)) == {(1, 10.0), (2, 20.0)}
-    assert rows(lake.read_table(spark, path, version=1)) == {(2, 20.0)}
-
-
 def test_restore_vacuumed_version_raises(spark, tbl):
     upd = spark.createDataFrame([(9, "z", 1.0)], "k long, s string, v double")
     lake.merge_upsert(spark, tbl, upd, keys=["k"])          # v1
@@ -2862,26 +2778,6 @@ def test_timestamp_travel_clamps_nonmonotonic_clock(spark, tbl):
     ts = dict(lake.commit_timestamps(tbl))
     assert ts[1] >= ts[0]           # monotonic clamp
     assert lake.version_at(tbl, 2000.0) == 1
-
-
-def test_timestamp_travel_posix(spark, tmp_path):
-    import os as _os
-
-    df = spark.createDataFrame([(1, 10.0)], "k long, v double")
-    path = str(tmp_path / "tstbl")
-    lake.write_table(df, path, protocol="posix")
-    lake.merge_upsert(
-        spark, path, spark.createDataFrame([(2, 20.0)], "k long, v double"),
-        keys=["k"],
-    )
-    s0 = _os.path.join(lake._snapshot_dir(path, 0), "_SUCCESS")
-    s1 = _os.path.join(lake._snapshot_dir(path, 1), "_SUCCESS")
-    _os.utime(s0, (1000.0, 1000.0))
-    _os.utime(s1, (2000.0, 2000.0))
-    assert lake.version_at(path, 1999.0) == 0
-    assert rows(lake.read_table(spark, path, timestamp=2001.0)) == {
-        (1, 10.0), (2, 20.0)
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -3106,20 +3002,6 @@ def test_merge_clause_validation(spark, tbl):
                    when_not_matched_by_source="delete")
 
 
-def test_merge_posix_protocol_full_clauses(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0)], "k long, v double"
-    )
-    path = str(tmp_path / "posixmerge")
-    lake.write_table(df, path, protocol="posix")
-    src = spark.createDataFrame([(2, 99.0), (4, 40.0)], "k long, v double")
-    lake.merge(spark, path, src, ["k"], when_not_matched_by_source="delete")
-    assert rows(lake.read_table(spark, path)) == {(2, 99.0), (4, 40.0)}
-    assert rows(lake.read_table(spark, path, version=0)) == {
-        (1, 10.0), (2, 20.0), (3, 30.0)
-    }
-
-
 def test_merge_partitioned_cow_carries_without_by_source(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "p1", 1.0), (2, "p1", 2.0), (3, "p2", 3.0), (4, "p3", 4.0)],
@@ -3276,11 +3158,6 @@ def test_transform_guards(spark, ttbl, tmp_path):
     with pytest.raises(ValueError, match="hash domain"):
         lake.widen_types(spark, ttbl, {"u": "bigint"})  # u already long: still guarded first
     df = spark.createDataFrame([(1, 2.0)], "k long, v double")
-    with pytest.raises(ValueError, match="manifest"):
-        lake.write_table(
-            df, str(tmp_path / "px"), partition_by=[("bucket", 2, "k")],
-            protocol="posix",
-        )
     with pytest.raises(ValueError, match="unknown partition transform"):
         lake.write_table(df, str(tmp_path / "bad"),
                          partition_by=[("years", "k")])
@@ -3430,14 +3307,6 @@ def test_dv_restore_rolls_back(spark, tbl):
     assert rows(lake.read_table(spark, tbl)) == {
         (2, "b", 20.0), (3, "c", 30.0)
     }
-
-
-def test_dv_posix_fallback_rewrites(spark, tmp_path):
-    df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
-    path = str(tmp_path / "dvposix")
-    lake.write_table(df, path, protocol="posix")
-    lake.delete_where_dv(spark, path, F.col("k") == 1)
-    assert rows(lake.read_table(spark, path)) == {(2, 20.0)}
 
 
 def test_dv_with_hidden_partitioning(spark, ttbl):
