@@ -238,9 +238,6 @@ class Catalog:
         spark: SparkSession,
         name: str,
         txn: int | None = None,
-        partitions: dict | None = None,
-        ranges: dict | None = None,
-        nulls: dict | None = None,
         where=None,
         since: int | None = None,
     ) -> DataFrame:
@@ -256,9 +253,6 @@ class Catalog:
             spark,
             self.table_path(name),
             version=st[name],
-            partitions=partitions,
-            ranges=ranges,
-            nulls=nulls,
             where=where,
             since=since,
         )
@@ -1386,39 +1380,17 @@ class Transaction:
         self._staged[name] = v
         return v
 
-    def delete_range(self, name: str, col: str, lo, hi) -> int:
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        rew, carry, pcols, dels = lake._m_range_plan(
-            self.spark, path, base, col, lo, hi
-        )
-        v = self._stage(
-            rew, path, pcols, carry, base, deletes=dels, mode="replace",
-        )
-        self._staged[name] = v
-        return v
-
     def delete_predicate(self, name: str, pred) -> int:
         """DELETE by predicate spec with general file pruning (see
         :func:`spype_spark.lakehouse.delete_predicate`), staged."""
         self._check_open()
         path = self.cat.table_path(name)
         base = self._resolve(name)
-        pred = lake._pred_resolve(pred)
-        m = lake._m_load(path, base)
-        pcols = m.get("partition_by")
-        entries = lake._m_entries(path, m)
-        maybe = lake._pred_compile(pred, pcols, root=path)
-        carry = [e for e in entries if not maybe(e)]
-        rewrite = [e for e in entries if maybe(e)]
-        keep = ~F.coalesce(lake._pred_column(pred), F.lit(False))
-        rew = lake._m_apply_deletes(
-            self.spark, path, rewrite, m
-        ).filter(keep)
+        rew, carry, pcols, dels = lake._m_pred_plan(
+            self.spark, path, base, pred
+        )
         v = self._stage(
-            rew, path, pcols, carry, base, deletes=m.get("deletes", []),
-            mode="replace",
+            rew, path, pcols, carry, base, deletes=dels, mode="replace",
         )
         self._staged[name] = v
         return v

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from spype_spark.avro_io import read_avro, write_avro
+from spype_spark.manifest_log import ConcurrentWriteError
 
 __all__ = [
     "read_iceberg",
@@ -1005,16 +1006,7 @@ def set_iceberg_name_mapping(
         },
         "last-updated-ms": int(time.time() * 1000),
     }
-    mpath = os.path.join(md, f"v{version}.metadata.json")
-    with open(mpath + ".tmp", "w") as f:
-        json.dump(new_meta, f)
-    os.replace(mpath + ".tmp", mpath)
-    with open(os.path.join(md, "version-hint.text.tmp"), "w") as f:
-        f.write(str(version))
-    os.replace(
-        os.path.join(md, "version-hint.text.tmp"),
-        os.path.join(md, "version-hint.text"),
-    )
+    _publish_metadata(md, version, new_meta)
     return version
 
 
@@ -1250,16 +1242,7 @@ def rename_iceberg_columns(
         "current-schema-id": new_sid,
         "last-updated-ms": int(time.time() * 1000),
     }
-    mpath = os.path.join(md, f"v{version}.metadata.json")
-    with open(mpath + ".tmp", "w") as f:
-        json.dump(new_meta, f)
-    os.replace(mpath + ".tmp", mpath)
-    with open(os.path.join(md, "version-hint.text.tmp"), "w") as f:
-        f.write(str(version))
-    os.replace(
-        os.path.join(md, "version-hint.text.tmp"),
-        os.path.join(md, "version-hint.text"),
-    )
+    _publish_metadata(md, version, new_meta)
     return version
 
 
@@ -1410,17 +1393,37 @@ def _publish_snapshot(
         "snapshot-log": [],
         "metadata-log": [],
     }
-    mpath = os.path.join(md, f"v{version}.metadata.json")
-    with open(mpath + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(mpath + ".tmp", mpath)
-    with open(os.path.join(md, "version-hint.text.tmp"), "w") as f:
-        f.write(str(version))
-    os.replace(
-        os.path.join(md, "version-hint.text.tmp"),
-        os.path.join(md, "version-hint.text"),
-    )
+    _publish_metadata(md, version, meta)
     return snap_id
+
+
+def _publish_metadata(md: str, version: int, meta: dict) -> None:
+    """Put-if-absent publish of ``v{version}.metadata.json``, then the
+    ``version-hint.text`` pointer: write + fsync a uuid-named temp file
+    and ``os.link`` it into place — the conditional-PUT discipline of
+    the native manifest and Delta commits. Two writers that read the
+    same current version race for one slot; the loser raises
+    :class:`ConcurrentWriteError` before touching the hint, so the
+    winner's snapshot survives (a rename would silently replace it)."""
+    final = os.path.join(md, f"v{version}.metadata.json")
+    tmp = os.path.join(md, f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, final)
+    except FileExistsError as exc:
+        raise ConcurrentWriteError(
+            f"Iceberg metadata version {version} of {md} was committed "
+            f"concurrently; re-read and retry"
+        ) from exc
+    finally:
+        os.unlink(tmp)
+    hint_tmp = os.path.join(md, f".tmp-{uuid.uuid4().hex}.text")
+    with open(hint_tmp, "w") as f:
+        f.write(str(version))
+    os.replace(hint_tmp, os.path.join(md, "version-hint.text"))
 
 
 def _current_version(md: str) -> int:

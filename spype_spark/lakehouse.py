@@ -318,31 +318,23 @@ def _transform_prune_entries(
     spark: SparkSession,
     entries: list[dict],
     transforms: list[dict],
-    partitions: dict | None,
-    ranges: dict | None,
     where,
 ) -> list[dict]:
-    """Hidden-partition file pruning: translate user predicates on
-    TRANSFORM SOURCE columns into constraints on the recorded hidden
-    partition values — the reader never names (or sees) the hidden
-    column, which is the whole point of Iceberg-style hidden
+    """Hidden-partition file pruning: translate a predicate spec's
+    leaves on TRANSFORM SOURCE columns into constraints on the recorded
+    hidden partition values — the reader never names (or sees) the
+    hidden column, which is the whole point of Iceberg-style hidden
     partitioning. Equality/IN prunes under every transform; ranges
     prune under the monotonic ones (days/hours/truncate map a value
     range to a hidden-value range); bucket prunes only eq/IN. OR nests
     are left alone (pruning only what provably cannot match); the
     residual row filter keeps semantics exact either way."""
-    # gather (source_col -> [(op, payload)]) from the three knobs;
-    # only top-level AND conjuncts of `where` participate
+    # gather (source_col -> [(op, payload)]); only top-level AND
+    # conjuncts of `where` participate
     by_src: dict[str, list] = {}
 
     def _add(col, op, payload):
         by_src.setdefault(col, []).append((op, payload))
-
-    for c, vals in (partitions or {}).items():
-        vlist = vals if isinstance(vals, (list, tuple, set)) else [vals]
-        _add(c, "in", list(vlist))
-    for c, (lo, hi) in (ranges or {}).items():
-        _add(c, "between", (lo, hi))
 
     def _walk(p):
         if p is None:
@@ -557,52 +549,15 @@ def _is_manifest_table(path: str) -> bool:
     return os.path.isdir(os.path.join(path, "_manifests"))
 
 
-def _slab_maybe(s: dict, partitions, ranges, nulls, maybe, since) -> bool:
+def _slab_maybe(s: dict, maybe, since) -> bool:
     """Three-valued slab refutation from a :func:`_m_slab_summary`:
-    False = NO entry in the slab can survive the scan's pruning knobs
-    (skip decoding it), True = some entry may. Mirrors the per-entry
-    pruning in :func:`scan_table` leaf for leaf; every summary field is
-    an envelope/sum over the slab's entries, so refuting the envelope
-    refutes every member. Missing summary fields always keep."""
-    for c, vals in (partitions or {}).items():
-        rec = (s.get("partition") or {}).get(c)
-        if rec is None:
-            continue  # mixed across the slab / not recorded — keep
-        vlist = vals if isinstance(vals, (list, tuple, set)) else [vals]
-        svals = set()
-        usable = True
-        for val in vlist:
-            sv = str(val)
-            if val is None or not _SAFE_PART_VAL.match(sv):
-                usable = False
-                break
-            svals.add(sv)
-        if not usable:
-            continue
-        if rec not in svals and _norm_part_val(rec) not in {
-            _norm_part_val(x) for x in svals
-        }:
-            return False
-    for c, (lo, hi) in (ranges or {}).items():
-        if lo is None or hi is None:
-            continue
-        st = (s.get("stats") or {}).get(c)
-        if st is None:
-            continue
-        try:
-            if st[1] < lo or st[0] > hi:
-                return False
-        except TypeError:
-            continue  # incomparable bounds — keep
-    for c, want_null in (nulls or {}).items():
-        nc = (s.get("nulls") or {}).get(c)
-        if nc is None:
-            continue
-        if want_null:
-            if nc == 0:
-                return False  # zero NULLs across the whole slab
-        elif s.get("rows") is not None and nc >= s["rows"]:
-            return False  # every row in the slab is NULL on c
+    False = NO entry in the slab can survive the scan's compiled
+    predicate or ``since`` cursor (skip decoding it), True = some entry
+    may. The summary is evaluated as one pseudo-entry by the same
+    compiled spec :func:`scan_table` applies per entry; every summary
+    field is an envelope/sum over the slab's entries, so refuting the
+    envelope refutes every member. Missing summary fields always
+    keep."""
     if maybe is not None:
         pseudo = {
             "partition": s.get("partition") or {},
@@ -623,9 +578,6 @@ def _slab_maybe(s: dict, partitions, ranges, nulls, maybe, since) -> bool:
 def _m_scan_entries(
     path: str,
     m: dict,
-    partitions,
-    ranges,
-    nulls,
     maybe,
     since,
     spark: "SparkSession | None" = None,
@@ -633,8 +585,9 @@ def _m_scan_entries(
 ) -> list[dict]:
     """Entry load for :func:`scan_table` with SLAB-GRANULAR pruning:
     part slabs whose pointer summary (:func:`_m_slab_summary`) refutes
-    every scan knob are skipped without being opened or JSON-decoded,
-    so planning cost is O(surviving slabs' entries + total slab count)
+    the compiled predicate ``maybe`` or the ``since`` cursor are
+    skipped without being opened or JSON-decoded, so planning cost is
+    O(surviving slabs' entries + total slab count)
     instead of O(total entries) — the difference between ~10 s and
     ~ms of driver time at 10⁵-10⁶ files when a scan touches one
     partition. Strictly a superset of the per-entry pruning that
@@ -657,7 +610,7 @@ def _m_scan_entries(
         if s is None:
             keep.append(name)
             continue
-        if not _slab_maybe(s, partitions, ranges, nulls, maybe, since):
+        if not _slab_maybe(s, maybe, since):
             continue
         keep.append(name)
         pseudos.append({"__slab": name, "partition": s.get("partition") or {}})
@@ -665,9 +618,7 @@ def _m_scan_entries(
     if tf and spark is not None and pseudos:
         surv = {
             p["__slab"]
-            for p in _transform_prune_entries(
-                spark, pseudos, tf, partitions, ranges, where
-            )
+            for p in _transform_prune_entries(spark, pseudos, tf, where)
         }
         keep = [n for n in keep if n not in summaries or n in surv]
     out: list[dict] = []
@@ -1241,66 +1192,6 @@ def _m_touched_strs(touched_vals: set) -> set[tuple] | None:
     return out
 
 
-def _m_stats_split(
-    entries: list[dict], key: str, umin, umax
-) -> tuple[list[dict], list[dict]] | None:
-    """FILE-level pruning from MANIFEST stats alone (zero object reads):
-    split entries into (carry, rewrite) — an entry whose recorded
-    [min, max] on ``key`` cannot intersect [umin, umax] provably holds
-    no affected row. None when the bounds are unusable (missing, or not
-    comparable to the numeric stats); entries without stats on ``key``
-    conservatively rewrite."""
-    if umin is None or umax is None:
-        return None
-    carry: list[dict] = []
-    rewrite: list[dict] = []
-    try:
-        for e in entries:
-            st = e.get("stats", {}).get(key)
-            if st is not None and (st[1] < umin or st[0] > umax):
-                carry.append(e)
-            else:
-                rewrite.append(e)
-    except TypeError:
-        return None
-    return carry, rewrite
-
-
-def _m_stats_split_keys(
-    entries: list[dict], ranges: dict
-) -> tuple[list[dict], list[dict]] | None:
-    """COMPOUND-KEY file pruning from manifest stats (r15): a merge
-    match equates ALL key columns, so a file provably holds no
-    matched row when ANY key's recorded [min, max] misses the update
-    set's range for that key — the conjunction of per-key range
-    refutations. ``ranges`` maps key → (lo, hi) of the update set;
-    keys with NULL bounds or non-comparable stats (string footer
-    truncation) simply cannot refute, they never force a rewrite on
-    their own. None when no key has usable bounds."""
-    usable = {
-        k: (lo, hi)
-        for k, (lo, hi) in ranges.items()
-        if lo is not None and hi is not None
-    }
-    if not usable:
-        return None
-    carry: list[dict] = []
-    rewrite: list[dict] = []
-    for e in entries:
-        stats = e.get("stats") or {}
-        refuted = False
-        for k, (lo, hi) in usable.items():
-            st = stats.get(k)
-            try:
-                if st is not None and (st[1] < lo or st[0] > hi):
-                    refuted = True
-                    break
-            except TypeError:
-                continue  # incomparable stats on this key: no verdict
-        (carry if refuted else rewrite).append(e)
-    return carry, rewrite
-
-
 # Above this many distinct update-set values per key, the merge
 # planner stops probing Blooms: the collect would no longer be
 # metadata-sized, and a batch that large is a bulk rewrite, not a
@@ -1342,10 +1233,10 @@ def _m_bloom_split(
     a file provably holds no matched row when, for ANY merge key with
     a recorded filter, NONE of the update set's values for that key
     might be in the file (a match equates all keys; Bloom misses are
-    proofs of absence). This is the prune that works where
-    :func:`_m_stats_split_keys` cannot — hash-shaped keys whose
-    per-file [min, max] all span the keyspace. Entries without a
-    filter on any probed key conservatively rewrite."""
+    proofs of absence). This is the prune that works where the
+    key-range spec (:func:`_m_key_range_pred`) cannot — hash-shaped
+    keys whose per-file [min, max] all span the keyspace. Entries
+    without a filter on any probed key conservatively rewrite."""
     carry: list[dict] = []
     rewrite: list[dict] = []
     for e in entries:
@@ -1407,12 +1298,15 @@ def _m_merge_prune_material(
 # consume: `_pred_column` compiles it to a Catalyst Column (the exact
 # row-level residual), `_pred_maybe` evaluates it three-valued against
 # one manifest entry's metadata (partition tuple, [min,max] stats, null
-# counts) to decide "may this file contain a matching row?". That is
-# the general form of every pruning rule above (partition = eq leaf,
-# range = between leaf, nulls = isnull leaf) plus the two combinators
-# real predicates need: AND prunes when ANY conjunct proves empty, OR
-# prunes only when ALL disjuncts do. Leaves without usable metadata
-# evaluate "maybe" — correctness over cleverness, as everywhere else.
+# counts, Bloom filters) to decide "may this file contain a matching
+# row?". It is the ONLY pruning language of the manifest planner: scan
+# slabs and files (scan_table), delete files (delete_predicate) and
+# merge files (the key-range conjunction of _m_key_range_pred) all
+# compile a spec. Partition pruning is an eq/in leaf on a partition
+# column, a key range is a between leaf, a null screen an isnull/notnull
+# leaf; AND prunes when ANY conjunct proves empty, OR prunes only when
+# ALL disjuncts do. Leaves without usable metadata evaluate "maybe" —
+# correctness over cleverness, as everywhere else.
 #
 # Spec grammar:
 #   ("and", p, ...) | ("or", p, ...)
@@ -1771,6 +1665,35 @@ def _m_cow_entries(
     return carry, touched
 
 
+def _m_refute_split(
+    entries: list[dict], pred, pcols: list[str] | None, root: str
+) -> tuple[list[dict], list[dict]]:
+    """Split entries into (refuted, maybe) under a predicate spec
+    compiled once (:func:`_pred_compile`): a refuted file provably
+    holds no matching row and carries by reference, the rest rewrite."""
+    maybe = _pred_compile(pred, pcols, root=root)
+    refuted: list[dict] = []
+    kept: list[dict] = []
+    for e in entries:
+        (kept if maybe(e) else refuted).append(e)
+    return refuted, kept
+
+
+def _m_key_range_pred(ranges: dict):
+    """A merge match as a predicate spec: the conjunction of
+    ``("between", key, lo, hi)`` over the update set's per-key ranges
+    — a match equates ALL keys, so ANY key's recorded [min, max]
+    missing its range refutes the file. Keys with NULL bounds are
+    left out (they cannot refute); None when no key has usable
+    bounds."""
+    leaves = [
+        ("between", k, lo, hi)
+        for k, (lo, hi) in ranges.items()
+        if lo is not None and hi is not None
+    ]
+    return ("and", *leaves) if leaves else None
+
+
 def _m_merge_plan(
     spark: SparkSession,
     path: str,
@@ -1848,9 +1771,11 @@ def _m_merge_plan(
             ranges, bvals = _m_merge_prune_material(
                 updates, keys, m.get("bloom_keys")
             )
-            split = _m_stats_split_keys(touched_entries, ranges)
-            if split is not None:
-                links, rewrite_entries = split
+            spec = _m_key_range_pred(ranges)
+            if spec is not None:
+                links, rewrite_entries = _m_refute_split(
+                    touched_entries, spec, pcols, path
+                )
                 carry = carry + links
             # Bloom refinement on whatever ranges couldn't refute —
             # the live prune for hash-shaped keys (r15)
@@ -1888,9 +1813,11 @@ def _m_merge_plan(
         ranges, bvals = _m_merge_prune_material(
             updates, keys, m.get("bloom_keys")
         )
-        split = _m_stats_split_keys(entries_all, ranges)
+        spec = _m_key_range_pred(ranges)
         carry0, rewrite_entries = (
-            split if split is not None else ([], entries_all)
+            _m_refute_split(entries_all, spec, pcols, path)
+            if spec is not None
+            else ([], entries_all)
         )
         # Bloom refinement (r15): runs even when ranges refuted
         # NOTHING — on a hash-distributed key layout every file's
@@ -1945,27 +1872,23 @@ def _m_delete_plan(
     return tgt.filter(keep), [], pcols, m.get("deletes", [])
 
 
-def _m_range_plan(
-    spark: SparkSession, path: str, base: int, col: str, lo, hi
-) -> tuple[DataFrame, list[dict], list[str] | None]:
-    """Plan a manifest range DELETE against an explicit base version
-    (see :func:`_m_merge_plan` for why the split exists). Falls back
-    to the general predicate plan when stats are unusable."""
+def _m_pred_plan(
+    spark: SparkSession, path: str, base: int, pred
+) -> tuple[DataFrame | None, list[dict], list[str] | None, list[dict]]:
+    """Plan a manifest DELETE by predicate spec against an explicit
+    base version (see :func:`_m_merge_plan` for why plans take a
+    base): files the compiled spec refutes carry by reference, the
+    rest are read back and row-filtered by the compiled residual.
+    When every file is refuted the data frame is None — a carry-only
+    commit with no write job (r15 opt)."""
+    pred = _pred_resolve(pred)
     m = _m_load(path, base)
     pcols = m.get("partition_by")
-    between = F.col(col).between(F.lit(lo), F.lit(hi))
-    split = _m_stats_split(_m_entries(path, m), col, lo, hi)
-    if split is None:
-        return _m_delete_plan(spark, path, base, between)
-    carry, rewrite_entries = split
-    if not rewrite_entries:
-        # every file's range refutes the interval: carry-only commit,
-        # no write job (r15 opt)
+    carry, rewrite = _m_refute_split(_m_entries(path, m), pred, pcols, path)
+    if not rewrite:
         return None, carry, pcols, m.get("deletes", [])
-    keep = ~F.coalesce(between, F.lit(False))
-    rew = _m_apply_deletes(spark, path, rewrite_entries, m).filter(
-        keep
-    )
+    keep = ~F.coalesce(_pred_column(pred), F.lit(False))
+    rew = _m_apply_deletes(spark, path, rewrite, m).filter(keep)
     return rew, carry, pcols, m.get("deletes", [])
 
 
@@ -2187,9 +2110,6 @@ def scan_table(
     spark: SparkSession,
     path: str,
     version: int | None = None,
-    partitions: dict | None = None,
-    ranges: dict | None = None,
-    nulls: dict | None = None,
     where=None,
     since: int | None = None,
 ) -> DataFrame:
@@ -2202,120 +2122,54 @@ def scan_table(
     semantics exact, so the result ALWAYS equals
     ``read_table(...).filter(...)``).
 
-    ``partitions``: ``{col: value_or_list}`` — keep only files whose
-    recorded partition tuple matches (canonical-string compare, the
-    same discipline as the COW planner; unsafe values disable pruning
-    for that column rather than guess). ``ranges``: ``{col: (lo, hi)}``
-    — keep only files whose manifest [min, max] can intersect
-    [lo, hi]; files without stats on the column are conservatively
-    kept. ``nulls``: ``{col: True_or_False}`` — ``True`` means the
-    predicate ``col IS NULL`` (keep only files whose recorded null
-    count is nonzero), ``False`` means ``col IS NOT NULL`` (keep only
-    files with a null count below their row count); files without a
-    recorded null count are conservatively kept. ``where``: a
-    PREDICATE SPEC (see the predicate-algebra grammar above
-    :func:`_pred_column`) — arbitrary AND/OR nests of comparisons,
-    IN, BETWEEN and IS [NOT] NULL leaves, pruned three-valued against
-    each file's metadata (AND prunes when any conjunct refutes, OR
-    only when all disjuncts do) with the compiled Column as the exact
-    residual. An ``("in_subquery", col, dim_df)`` leaf runs the
-    dimension query FIRST and prunes the fact file list by its
-    distinct key set — manifest-layer dynamic partition pruning (see
-    :func:`_pred_resolve`). ``since``: INCREMENTAL scan — keep only files whose
-    commit sequence exceeds that version, i.e. files added after a
-    consumer's checkpoint: for an append-only table this reads exactly
-    the new rows at O(new files) cost (Iceberg's incremental append
-    scan; the manifest-metadata dual of :func:`changes`, which handles
+    ``where``: a PREDICATE SPEC (see the predicate-algebra grammar
+    above :func:`_pred_column`) — AND/OR nests of comparisons, IN,
+    BETWEEN and IS [NOT] NULL leaves, e.g. ``("and", ("in", "p", [0,
+    2]), ("between", "k", 100, 140), ("notnull", "v"))``. It is
+    compiled once and pruned three-valued against each part slab's
+    summary and then each file's metadata (partition tuple, [min, max]
+    stats, null counts, Bloom filters; AND prunes when any conjunct
+    refutes, OR only when all disjuncts do), with the compiled Column
+    as the exact residual. Leaves on a hidden-partition transform's
+    source column also prune through the recorded hidden values. An
+    ``("in_subquery", col, dim_df)`` leaf runs the dimension query
+    FIRST and prunes the fact file list by its distinct key set —
+    manifest-layer dynamic partition pruning (see
+    :func:`_pred_resolve`).
+
+    ``since``: INCREMENTAL scan — keep only files whose commit sequence
+    exceeds that version, i.e. files added after a consumer's
+    checkpoint: for an append-only table this reads exactly the new
+    rows at O(new files) cost (Iceberg's incremental append scan; the
+    manifest-metadata dual of :func:`changes`, which handles
     updates/deletes too by diffing snapshots). A REWRITTEN file's rows
-    all carry the rewriting commit's seq, so a consumer of a table
-    that also merges/deletes should use :func:`changes` instead —
-    ``since`` is the appends fast path. All knobs compose as a
+    all carry the rewriting commit's seq, so a consumer of a table that
+    also merges/deletes should use :func:`changes` instead — ``since``
+    is the appends fast path. It composes with ``where`` as a
     conjunction."""
     v = latest_version(path) if version is None else version
+    m = _m_load(path, v)
+    maybe = None
     if where is not None:
         where = _pred_resolve(where)  # runtime (subquery) leaves → IN
-
-    def _residual(df: DataFrame) -> DataFrame:
-        for c, vals in (partitions or {}).items():
-            vlist = vals if isinstance(vals, (list, tuple, set)) else [vals]
-            df = df.filter(F.col(c).isin(list(vlist)))
-        for c, (lo, hi) in (ranges or {}).items():
-            df = df.filter(F.col(c).between(F.lit(lo), F.lit(hi)))
-        for c, want_null in (nulls or {}).items():
-            df = df.filter(
-                F.col(c).isNull() if want_null else F.col(c).isNotNull()
-            )
-        if where is not None:
-            df = df.filter(_pred_column(where))
-        return df
-
-    m = _m_load(path, v)
-    maybe = (
-        _pred_compile(where, m.get("partition_by"), root=path)
-        if where is not None
-        else None
-    )
+        maybe = _pred_compile(where, m.get("partition_by"), root=path)
     # slab-granular pruning first: refuted part slabs are never opened
-    entries = _m_scan_entries(
-        path, m, partitions, ranges, nulls, maybe, since,
-        spark=spark, where=where,
-    )
-    for c, vals in (partitions or {}).items():
-        vlist = vals if isinstance(vals, (list, tuple, set)) else [vals]
-        svals = set()
-        usable = True
-        for val in vlist:
-            sv = str(val)
-            if val is None or not _SAFE_PART_VAL.match(sv):
-                usable = False  # can't canonicalize — keep all files
-                break
-            svals.add(sv)
-        if usable:
-            # Same ambiguity fallback as the eq/in leaf in
-            # _pred_compile: a recorded '001' must survive a request
-            # for 1, because the residual isin([1]) matches it after
-            # Spark's implicit cast — exact-string-only pruning here
-            # would break the scan_table ≡ read_table().filter()
-            # guarantee.
-            norms = {_norm_part_val(s) for s in svals}
-            entries = [
-                e
-                for e in entries
-                if e["partition"].get(c) is None  # not a partition col
-                or e["partition"][c] in svals
-                or _norm_part_val(e["partition"][c]) in norms
-            ]
-    for c, (lo, hi) in (ranges or {}).items():
-        split = _m_stats_split(entries, c, lo, hi)
-        if split is not None:
-            _skippable, entries = split
-    for c, want_null in (nulls or {}).items():
-        kept = []
-        for e in entries:
-            nc = e.get("nulls", {}).get(c)
-            if nc is None:  # pre-null-stats manifest — keep
-                kept.append(e)
-            elif want_null:
-                if nc > 0:
-                    kept.append(e)
-            elif nc < e["rows"]:
-                kept.append(e)
-        entries = kept
+    entries = _m_scan_entries(path, m, maybe, since, spark=spark, where=where)
     if maybe is not None:
         entries = [e for e in entries if maybe(e)]
     tf = m.get("transforms")
     if tf:
         # hidden-partition pruning: user predicates on the transform
         # SOURCE columns cut the file list via recorded hidden values
-        entries = _transform_prune_entries(
-            spark, entries, tf, partitions, ranges, where
-        )
+        entries = _transform_prune_entries(spark, entries, tf, where)
     if since is not None:
         entries = [e for e in entries if e.get("seq", 0) > since]
     out = _m_apply_deletes(spark, path, entries, m)
     if tf:
         out = out.drop(*[t["name"] for t in tf])
-    return _residual(out)
+    if where is not None:
+        out = out.filter(_pred_column(where))
+    return out
 
 
 # Type transitions schema evolution may take, old → new: the safe
@@ -3373,34 +3227,17 @@ def delete_predicate(spark: SparkSession, path: str, pred) -> int:
     AND/OR nest of comparisons, IN, BETWEEN and IS [NOT] NULL leaves —
     carry into the new version BY REFERENCE; only possibly-matching
     files are read back, row-filtered by the compiled residual, and
-    rewritten. This is the provable general form of
-    :func:`delete_range` (whose interval shape is the single-leaf
-    case): a retention sweep like ``(ts < cutoff) OR (status = 'tmp'
-    AND ts BETWEEN a AND b)`` touches exactly the files its disjuncts
-    can reach, O(matching files) not O(table), which is the whole game
-    at 100 TB. Sound fallback everywhere: leaves without usable stats
+    rewritten. A range delete is the single-leaf case
+    ``("between", col, lo, hi)``; a retention sweep like ``(ts <
+    cutoff) OR (status = 'tmp' AND ts BETWEEN a AND b)`` touches
+    exactly the files its disjuncts can reach, O(matching files) not
+    O(table), which is the whole game at 100 TB. Sound fallback everywhere: leaves without usable stats
     keep their files. NULL-evaluating rows are KEPT (SQL DELETE
     semantics). Returns the new version."""
-    pred = _pred_resolve(pred)
-    cond = _pred_column(pred)
     base = latest_version(path)
-    m = _m_load(path, base)
-    pcols = m.get("partition_by")
-    entries = _m_entries(path, m)
-    maybe = _pred_compile(pred, pcols, root=path)
-    carry = [e for e in entries if not maybe(e)]
-    rewrite = [e for e in entries if maybe(e)]
-    # every file refuted → a provable no-op on the data: commit the
-    # carried entries WITHOUT a write job (r15 opt — the empty-frame
-    # write was a full Spark job + task files for zero rows)
-    if not rewrite:
-        rew = None
-    else:
-        keep = ~F.coalesce(cond, F.lit(False))
-        rew = _m_apply_deletes(spark, path, rewrite, m).filter(keep)
+    rew, carry, pcols, dels = _m_pred_plan(spark, path, base, pred)
     return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base,
-        deletes=m.get("deletes", []),
+        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
         op={"name": "DELETE", "dataChange": True},
     )
 
@@ -3659,29 +3496,6 @@ def _m_apply_deletes_pos(
                 df = df.join(F.broadcast(kdf), d["keys"], "left_anti")
         out = df if out is None else out.unionByName(df)
     return out
-
-
-def delete_range(
-    spark: SparkSession, path: str, col: str, lo, hi
-) -> int:
-    """DELETE WHERE ``col BETWEEN lo AND hi`` with FILE-level manifest
-    pruning: the manifest entries' min/max stats on ``col`` prove which
-    data files contain no row in the deleted interval — those carry by
-    reference untouched (across ALL partitions), and only the
-    intersecting files are read back and rewritten with the keep
-    filter. No parquet footer is read at plan time. The explicit
-    interval form is the single-leaf case of :func:`delete_predicate`;
-    range deletes (retention windows, backfill corrections) are the
-    shape stats refute best. Falls back to the :func:`delete_where`
-    plan whenever stats are unusable. Result is row-identical to
-    ``delete_where(col BETWEEN lo AND hi)`` (NULL ``col`` rows are
-    kept, SQL DELETE semantics — a NULL never matches BETWEEN)."""
-    base = latest_version(path)
-    rew, carry, pcols, dels = _m_range_plan(spark, path, base, col, lo, hi)
-    return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "DELETE", "dataChange": True},
-    )
 
 
 def compact(
@@ -4122,7 +3936,7 @@ def read_changes_stream(
 # is what lets several metadata roots share one set of immutable data
 # files with zero copies. Because a branch root IS a manifest table,
 # every verb in this module (read_table, scan_table, merge_upsert,
-# delete_where, update_where, delete_keys, delete_range, compact,
+# delete_where, update_where, delete_keys, delete_predicate, compact,
 # table_diff, changes, history, vacuum) works on it unchanged; branch
 # mutations write their new data under the branch's own data/ dir and
 # publish put-if-absent in the branch's own manifest chain, completely

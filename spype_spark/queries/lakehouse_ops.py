@@ -444,12 +444,13 @@ def q_lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lake_delete_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stats-pruned range DELETE: the base table is written as
     range-clustered files (disjoint o_orderkey intervals recorded as
-    manifest [min, max] stats); ``delete_range`` must remove exactly
-    the keyed interval — the relational oracle — while carrying every
-    file whose recorded interval misses [2000, 2999] BY REFERENCE into
-    the new manifest, with ZERO parquet footer reads at plan time
-    (asserted in-contract by manifest-entry path identity, so a
-    regression to whole-partition rewrites fails the driver gate).
+    manifest [min, max] stats); ``delete_predicate`` with the
+    single-leaf spec ``("between", "o_orderkey", 2000, 2999)`` must
+    remove exactly the keyed interval — the relational oracle — while
+    carrying every file whose recorded interval misses [2000, 2999] BY
+    REFERENCE into the new manifest, with ZERO parquet footer reads at
+    plan time (asserted in-contract by manifest-entry path identity, so
+    a regression to whole-partition rewrites fails the driver gate).
     This is the retention-window delete a 100 TB time-partitioned
     table runs daily."""
     tmp = _scratch("spype_lake_dr_")
@@ -460,7 +461,9 @@ def q_lake_delete_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             partition_by="o_orderstatus",
         )
-        lake.delete_range(spark, path, "o_orderkey", 2000, 2999)
+        lake.delete_predicate(
+            spark, path, ("between", "o_orderkey", 2000, 2999)
+        )
 
         f0 = set(lake.data_files(path, 0))
         f1 = set(lake.data_files(path, 1))
@@ -526,8 +529,11 @@ def q_lake_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = lake.scan_table(
             spark,
             path,
-            partitions={"o_orderstatus": ["O", "F"]},
-            ranges={"o_orderkey": (2000, 4999)},
+            where=(
+                "and",
+                ("in", "o_orderstatus", ["O", "F"]),
+                ("between", "o_orderkey", 2000, 4999),
+            ),
         )
         n_full = len(set(full.inputFiles()))
         n_pruned = len(set(pruned.inputFiles()))
@@ -925,11 +931,11 @@ def q_lake_scan_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IS NULL file pruning from manifest null-count stats: the table
     carries a column (``o_ship``) that is NULL exactly on status-F
     rows; partitioning by status makes the null distribution
-    file-correlated, so ``scan_table(nulls={"o_ship": True})`` keeps
-    only the F-partition files from the recorded per-file null counts
-    — zero object reads at plan time — and the residual ``IS NULL``
-    filter keeps row semantics exact. The inverse direction
-    (``False`` → IS NOT NULL) is asserted in-contract to prune too,
+    file-correlated, so ``scan_table(where=("isnull", "o_ship"))``
+    keeps only the F-partition files from the recorded per-file null
+    counts — zero object reads at plan time — and the residual
+    ``IS NULL`` filter keeps row semantics exact. The inverse leaf
+    (``("notnull", "o_ship")``) is asserted in-contract to prune too,
     and to partition the row count with the NULL side. The oracle is
     the plain relational answer. Null counts are the one footer stat
     that exists even for all-NULL files (where min/max cannot), which
@@ -945,8 +951,10 @@ def q_lake_scan_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         lake.write_table(src, path, partition_by="o_orderstatus")
         full = lake.read_table(spark, path)
         n_full = len(set(full.inputFiles()))
-        isnull = lake.scan_table(spark, path, nulls={"o_ship": True})
-        notnull = lake.scan_table(spark, path, nulls={"o_ship": False})
+        isnull = lake.scan_table(spark, path, where=("isnull", "o_ship"))
+        notnull = lake.scan_table(
+            spark, path, where=("notnull", "o_ship")
+        )
         n_isnull = len(set(isnull.inputFiles()))
         n_notnull = len(set(notnull.inputFiles()))
         if not (0 < n_isnull < n_full and 0 < n_notnull < n_full):
@@ -985,12 +993,11 @@ def q_lake_scan_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (status/key disjuncts) evaluated three-valued per file — AND
     prunes when any conjunct refutes from partition tuples or min/max
     stats, OR only when every disjunct does — then the compiled
-    residual keeps row semantics exact. This is the general form the
-    single-shape knobs (partitions=, ranges=, nulls=) special-case;
-    the strict-subset inputFiles assertion pins that disjunctive
-    predicates still prune (the case naive per-column pruning cannot
-    express, because neither column's global range excludes
-    anything)."""
+    residual keeps row semantics exact. Partition, range and null
+    screens are single leaves of the same spec; the strict-subset
+    inputFiles assertion pins that disjunctive predicates still prune
+    (the case naive per-column pruning cannot express, because
+    neither column's global range excludes anything)."""
     tmp = _scratch("spype_lake_predscan_")
     try:
         path = f"{tmp}/orders_tbl"
@@ -2425,7 +2432,7 @@ def q_lake_scan_slab_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "slab summaries"
             )
         pruned = lake._m_scan_entries(
-            path, m, {"p": [3, 7]}, None, None, None, None
+            path, m, lake._pred_compile(("in", "p", [3, 7]), ["p"]), None
         )
         full = lake._m_entries(path, m)
         if not pruned or len(pruned) >= len(full):
@@ -2445,8 +2452,11 @@ def q_lake_scan_slab_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             lake.scan_table(
                 spark,
                 path,
-                partitions={"p": [3, 7]},
-                where=("ge", "o_totalprice", 1000.0),
+                where=(
+                    "and",
+                    ("in", "p", [3, 7]),
+                    ("ge", "o_totalprice", 1000.0),
+                ),
             )
             .localCheckpoint()
         )

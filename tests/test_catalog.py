@@ -153,7 +153,7 @@ def test_txn_write_replace_and_delete_range_prune(spark, tmp_path):
     with cat.transaction(spark) as txn:
         txn.write(big.repartitionByRange(4, "k"), "t")
     with cat.transaction(spark) as txn:
-        txn.delete_range("t", "k", 10, 20)
+        txn.delete_predicate("t", ("between", "k", 10, 20))
     p = cat.table_path("t")
     v0, v1 = cat.state(0)["t"], cat.state(1)["t"]
     f0 = {e["path"] for e in lake._m_load(p, v0)["files"]}
@@ -569,6 +569,29 @@ def test_txn_append_and_delete_predicate(spark, tmp_path):
     # the append step carried every base file by reference
     v_app = cat.state()["t"] - 1
     assert f0 <= set(lake.data_files(p, v_app))
+
+
+def test_txn_delete_predicate_refuting_every_file_is_carry_only(
+    spark, tmp_path
+):
+    """A staged predicate DELETE whose spec refutes every file stages a
+    carry-only version: every base entry carries by reference and no
+    data file is written — the same fast path as
+    lakehouse.delete_predicate."""
+    cat = Catalog(str(tmp_path / "dp0"))
+    base = spark.createDataFrame(
+        [(k, k * 10) for k in range(40)], "k long, v long"
+    )
+    with cat.transaction(spark) as t:
+        t.write(base.repartitionByRange(4, "k"), "t")
+    p = cat.table_path("t")
+    v0 = cat.state()["t"]
+    with cat.transaction(spark) as t:
+        t.delete_predicate("t", ("between", "k", 100, 200))
+    v1 = cat.state()["t"]
+    assert v1 > v0
+    assert set(lake.data_files(p, v1)) == set(lake.data_files(p, v0))
+    assert {r.k for r in cat.read(spark, "t").collect()} == set(range(40))
 
 
 def test_catalog_vacuum_grace_spares_live_staged_slot(spark, tmp_path):

@@ -113,6 +113,41 @@ def test_iceberg_write_read_snapshot_chain(spark, tmp_path):
     assert hist[s2] == s1 and hist[s1] is None
 
 
+def test_iceberg_same_version_publish_raises_and_keeps_winner(
+    spark, tmp_path, monkeypatch
+):
+    """Two writers that read the same current metadata version race for
+    one ``v{N}.metadata.json`` slot: the later one raises
+    ConcurrentWriteError instead of replacing the file, so the first
+    writer's snapshot survives — for snapshot publishes and for the
+    metadata-only verbs alike."""
+    from spype_spark.lakehouse import ConcurrentWriteError
+
+    p = str(tmp_path / "t")
+    md = os.path.join(p, "metadata")
+    ice.write_iceberg(spark, _df(spark, 0, 10), p)
+    stale = ice._current_version(md)
+    s2 = ice.write_iceberg(spark, _df(spark, 10, 20), p, mode="append")
+    slot = os.path.join(md, f"v{stale + 1}.metadata.json")
+    with open(slot) as f:
+        winner = f.read()
+    # the losers read the current version before the winner published
+    monkeypatch.setattr(ice, "_current_version", lambda _md: stale)
+    with pytest.raises(ConcurrentWriteError):
+        ice.write_iceberg(spark, _df(spark, 20, 30), p, mode="append")
+    with pytest.raises(ConcurrentWriteError):
+        ice.set_iceberg_name_mapping(spark, p)
+    with pytest.raises(ConcurrentWriteError):
+        ice.rename_iceberg_columns(spark, p, {"v": "value"})
+    monkeypatch.undo()
+    with open(slot) as f:
+        assert f.read() == winner
+    assert ice._current_version(md) == stale + 1
+    assert ice._current_metadata(p)["current-snapshot-id"] == s2
+    assert _rows(ice.read_iceberg(spark, p)) == _rows(_df(spark, 0, 20))
+    assert not [n for n in os.listdir(md) if n.startswith(".tmp")]
+
+
 def test_iceberg_unpartitioned_and_version_hint_fallback(spark, tmp_path):
     p = str(tmp_path / "t")
     ice.write_iceberg(spark, _df(spark, 0, 12).select("k", "v"), p)

@@ -369,7 +369,7 @@ def test_partitioned_append_records_partition_values(reg, tmp_path):
     new = [e for e in mlog.m_entries(p, m) if e["seq"] == m["version"]]
     assert new and all(e["partition"].get("g") in {"0", "1", "2"} for e in new)
     # partition pruning over the sink-written entries
-    only1 = lake.scan_table(reg, p, partitions={"g": 1})
+    only1 = lake.scan_table(reg, p, where=("in", "g", [1]))
     assert sorted(r["k"] for r in only1.collect()) == [
         k for k in range(32) if k % 3 == 1
     ]

@@ -84,7 +84,9 @@ def test_compact_shrinks_files_preserves_content(spark, tmp_path):
 
 _NON_TABLE_VERBS = {
     "read_table": lambda s, p, kv: lake.read_table(s, p),
-    "scan_table": lambda s, p, kv: lake.scan_table(s, p, ranges={"k": (0, 1)}),
+    "scan_table": lambda s, p, kv: lake.scan_table(
+        s, p, where=("between", "k", 0, 1)
+    ),
     "merge_upsert": lambda s, p, kv: lake.merge_upsert(s, p, kv, ["k"]),
     "delete_where": lambda s, p, kv: lake.delete_where(s, p, F.col("k") == 1),
     "update_where": lambda s, p, kv: lake.update_where(
@@ -92,7 +94,9 @@ _NON_TABLE_VERBS = {
     ),
     "append_table": lambda s, p, kv: lake.append_table(s, p, kv),
     "delete_keys": lambda s, p, kv: lake.delete_keys(s, p, kv.select("k")),
-    "delete_range": lambda s, p, kv: lake.delete_range(s, p, "k", 0, 1),
+    "delete_predicate": lambda s, p, kv: lake.delete_predicate(
+        s, p, ("between", "k", 0, 1)
+    ),
     "compact": lambda s, p, kv: lake.compact(s, p),
     "restore_table": lambda s, p, kv: lake.restore_table(s, p, 0),
     "widen_types": lambda s, p, kv: lake.widen_types(s, p, {"k": "bigint"}),
@@ -642,7 +646,8 @@ def test_vacuum_respects_hardlinked_carries(spark, tmp_path):
 
 
 def test_delete_range_prunes_files_and_matches_delete_where(spark, tmp_path):
-    """delete_range must (a) equal delete_where(col BETWEEN lo AND hi)
+    """A range delete — delete_predicate with a single between leaf —
+    must (a) equal delete_where(col BETWEEN lo AND hi)
     row-for-row, and (b) carry every data file whose recorded interval
     misses the deleted range — on partitioned AND unpartitioned tables."""
     # partitioned: 4 range-clustered files inside p=0
@@ -654,7 +659,7 @@ def test_delete_range_prunes_files_and_matches_delete_where(spark, tmp_path):
     twin = str(tmp_path / "dr_twin")
     lake.write_table(df.repartitionByRange(4, "k"), twin, partition_by="p")
 
-    lake.delete_range(spark, path, "k", 10, 20)
+    lake.delete_predicate(spark, path, ("between", "k", 10, 20))
     lake.delete_where(spark, twin, F.col("k").between(10, 20))
     got = {(r.k, r.v) for r in lake.read_table(spark, path).collect()}
     want = {(r.k, r.v) for r in lake.read_table(spark, twin).collect()}
@@ -666,7 +671,7 @@ def test_delete_range_prunes_files_and_matches_delete_where(spark, tmp_path):
     # unpartitioned: same pruning across the whole table
     flat = str(tmp_path / "dr_flat")
     lake.write_table(df.select("k", "v").repartitionByRange(4, "k"), flat)
-    lake.delete_range(spark, flat, "k", 390, 600)
+    lake.delete_predicate(spark, flat, ("between", "k", 390, 600))
     got_flat = {(r.k, r.v) for r in lake.read_table(spark, flat).collect()}
     assert got_flat == {(k, k * 10) for k in range(390)}
     f0, f1 = set(lake.data_files(flat, 0)), set(lake.data_files(flat, 1))
@@ -717,14 +722,14 @@ def test_boolean_partition_values_round_trip_typed(spark, tmp_path):
 
 
 def test_delete_range_uncomparable_bounds_fall_back(spark, tmp_path):
-    """Regression (round-8 ADVICE, low): delete_range with bounds whose
-    Python type is not comparable to the numeric footer stats (string
-    bounds on an int column) must fall back to delete_where semantics,
-    not raise TypeError from the footer-interval compare."""
+    """Regression (round-8 ADVICE, low): a range delete with bounds
+    whose Python type is not comparable to the numeric footer stats
+    (string bounds on an int column) must fall back to delete_where
+    semantics, not raise TypeError from the footer-interval compare."""
     path = str(tmp_path / "drs")
     df = spark.createDataFrame([(k, k * 10) for k in range(40)], "k long, v long")
     lake.write_table(df.repartitionByRange(4, "k"), path)
-    lake.delete_range(spark, path, "k", "10", "20")  # string bounds
+    lake.delete_predicate(spark, path, ("between", "k", "10", "20"))
     got = {r.k for r in lake.read_table(spark, path).collect()}
     assert got == {k for k in range(40) if not 10 <= k <= 20}
 
@@ -871,7 +876,7 @@ def test_manifest_vacuum_gc_by_path_reference(spark, tmp_path):
 
 
 def test_manifest_delete_range_prunes_from_manifest_stats(spark, tmp_path):
-    """delete_range on a manifest table: the carry/rewrite split comes
+    """A range delete on a manifest table: the carry/rewrite split comes
     from the manifest's recorded [min,max] — files whose interval
     misses the range carry by reference; result equals delete_where."""
     path = str(tmp_path / "mdr")
@@ -880,13 +885,13 @@ def test_manifest_delete_range_prunes_from_manifest_stats(spark, tmp_path):
     )
     lake.write_table(df.repartitionByRange(4, "k"), path)
     assert len(lake.data_files(path, 0)) == 4
-    lake.delete_range(spark, path, "k", 10, 20)
+    lake.delete_predicate(spark, path, ("between", "k", 10, 20))
     f0, f1 = set(lake.data_files(path, 0)), set(lake.data_files(path, 1))
     assert len(f0 & f1) == 3, "3 of 4 range files must carry by reference"
     got = {r.k for r in lake.read_table(spark, path).collect()}
     assert got == {k for k in range(400) if not 10 <= k <= 20}
     # uncomparable bounds fall back to delete_where semantics
-    lake.delete_range(spark, path, "k", "30", "40")
+    lake.delete_predicate(spark, path, ("between", "k", "30", "40"))
     got2 = {r.k for r in lake.read_table(spark, path).collect()}
     assert got2 == {k for k in range(400)
                     if not 10 <= k <= 20 and not 30 <= k <= 40}
@@ -1043,21 +1048,22 @@ def test_manifest_scan_table_prunes_files_and_matches_filter(spark, tmp_path):
     all_files = set(lake.read_table(spark, path).inputFiles())
 
     # partition pruning: only p=1 files survive
-    part = lake.scan_table(spark, path, partitions={"p": 1})
+    part = lake.scan_table(spark, path, where=("in", "p", [1]))
     assert set(part.inputFiles()) < all_files
     want = {(r.k, r.v) for r in lake.read_table(spark, path)
             .filter("p = 1").select("k", "v").collect()}
     assert {(r.k, r.v) for r in part.select("k", "v").collect()} == want
 
     # range pruning: k in [50, 80] hits a subset of the range files
-    rng = lake.scan_table(spark, path, ranges={"k": (50, 80)})
+    rng = lake.scan_table(spark, path, where=("between", "k", 50, 80))
     assert set(rng.inputFiles()) < all_files
     got = {r.k for r in rng.collect()}
     assert got == set(range(50, 81))
 
     # combined, plus row-exactness against the naive filtered read
     both = lake.scan_table(
-        spark, path, partitions={"p": [0, 2]}, ranges={"k": (100, 140)}
+        spark, path,
+        where=("and", ("in", "p", [0, 2]), ("between", "k", 100, 140)),
     )
     naive = lake.read_table(spark, path).filter(
         (F.col("p").isin(0, 2)) & F.col("k").between(100, 140)
@@ -1076,24 +1082,26 @@ def test_string_key_file_pruning_both_protocols(spark, tmp_path):
     recorded interval misses the bounds."""
     rows = [(f"doc{k:04d}", k) for k in range(400)]
 
-    # delete_range carries non-matching files by reference, scan_table
+    # a range delete carries non-matching files by reference, scan_table
     # cuts the file list from the manifest alone
     path = str(tmp_path / "strprune")
     df = spark.createDataFrame(rows, "id string, v long")
     lake.write_table(df.repartitionByRange(4, "id"), path)
     assert len(lake.data_files(path, 0)) == 4
-    rng = lake.scan_table(spark, path, ranges={"id": ("doc0050", "doc0080")})
+    rng = lake.scan_table(
+        spark, path, where=("between", "id", "doc0050", "doc0080")
+    )
     assert len(set(rng.inputFiles())) < 4, "string range must prune files"
     assert {r.id for r in rng.collect()} == {
         f"doc{k:04d}" for k in range(50, 81)
     }
-    lake.delete_range(spark, path, "id", "doc0010", "doc0020")
+    lake.delete_predicate(spark, path, ("between", "id", "doc0010", "doc0020"))
     f0, f1 = set(lake.data_files(path, 0)), set(lake.data_files(path, 1))
     assert len(f0 & f1) == 3, "3 of 4 string-range files must carry"
     got = {r.id for r in lake.read_table(spark, path).collect()}
     assert got == {f"doc{k:04d}" for k in range(400) if not 10 <= k <= 20}
     # an interval open past the max touches only the last range file
-    lake.delete_range(spark, path, "id", "doc0390", "doc9999")
+    lake.delete_predicate(spark, path, ("between", "id", "doc0390", "doc9999"))
     f2 = set(lake.data_files(path, 2))
     assert len(f1 - f2) == 1, "only the last string-range file rewrites"
     got = {r.id for r in lake.read_table(spark, path).collect()}
@@ -1139,7 +1147,7 @@ def test_manifest_parts_content_addressed_carry(spark, tmp_path, monkeypatch):
             lake.read_table(spark, path, version=0).collect()} == got0
 
     # reader pruning works from slab-resolved entries
-    pr = lake.scan_table(spark, path, partitions={"p": 2})
+    pr = lake.scan_table(spark, path, where=("in", "p", [2]))
     assert {r.k for r in pr.collect()} == {k for k in range(400) if k % 4 == 2}
     assert len(set(pr.inputFiles())) < len(
         set(lake.read_table(spark, path).inputFiles())
@@ -1192,9 +1200,12 @@ def test_slab_summary_pruning_skips_decode(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(mlog, "_PART_INLINE_MAX", 4)
     path = str(tmp_path / "slabsum")
     # p = k // 100: partition value and k-range per slab are correlated,
-    # so BOTH the partition knob and the stats envelope can refute slabs
+    # so BOTH a partition leaf and the stats envelope can refute slabs;
+    # v is NULL exactly on the p=2 slab, so null leaves refute too
     df = spark.createDataFrame(
-        [(k, k * 10, k // 100) for k in range(800)], "k long, v long, p long"
+        [(k, None if k // 100 == 2 else k * 10, k // 100)
+         for k in range(800)],
+        "k long, v long, p long",
     )
     lake.write_table(df.repartition(3, "k"), path, partition_by="p")
     m = lake._m_load(path, 0)
@@ -1215,15 +1226,15 @@ def test_slab_summary_pruning_skips_decode(spark, tmp_path, monkeypatch):
         return real_open(fp, *a, **kw)
 
     monkeypatch.setattr(lake, "open", counting_open, raising=False)
-    got = lake.scan_table(spark, path, partitions={"p": 3})
+    got = lake.scan_table(spark, path, where=("in", "p", [3]))
     assert len(opened) == 1, f"expected 1 slab decoded, opened {opened}"
     monkeypatch.delattr(lake, "open", raising=False)
     assert {r.k for r in got.collect()} == set(range(300, 400))
 
-    # range knob prunes via the stats envelope
+    # a between leaf prunes via the stats envelope
     opened.clear()
     monkeypatch.setattr(lake, "open", counting_open, raising=False)
-    got = lake.scan_table(spark, path, ranges={"k": (0, 7)})
+    got = lake.scan_table(spark, path, where=("between", "k", 0, 7))
     n_opened = len(opened)
     monkeypatch.delattr(lake, "open", raising=False)
     assert n_opened == 1, "stats envelope refuted the other 7 slabs"
@@ -1236,6 +1247,27 @@ def test_slab_summary_pruning_skips_decode(spark, tmp_path, monkeypatch):
     assert len(opened) == 1
     monkeypatch.delattr(lake, "open", raising=False)
     assert {r.k for r in got.collect()} == set(range(500, 600))
+
+    # isnull/notnull leaves refute from the slab null-count sums
+    null_slab = next(
+        n for n, s in m["part_summaries"].items()
+        if s["partition"]["p"] == "2"
+    )
+    opened.clear()
+    monkeypatch.setattr(lake, "open", counting_open, raising=False)
+    got = lake.scan_table(spark, path, where=("isnull", "v"))
+    monkeypatch.delattr(lake, "open", raising=False)
+    assert opened == [null_slab], "slabs without a NULL v were decoded"
+    assert {r.k for r in got.collect()} == set(range(200, 300))
+    opened.clear()
+    monkeypatch.setattr(lake, "open", counting_open, raising=False)
+    got = lake.scan_table(spark, path, where=("notnull", "v"))
+    monkeypatch.delattr(lake, "open", raising=False)
+    assert null_slab not in opened, "the all-NULL slab was decoded"
+    assert len(opened) == 7
+    assert {r.k for r in got.collect()} == (
+        set(range(800)) - set(range(200, 300))
+    )
 
     # since= prunes by the slab's seq envelope: append a second commit,
     # an incremental scan from v0 must not decode v0's carried slabs
@@ -1282,7 +1314,7 @@ def test_slab_pruning_hidden_partition_transforms(spark, tmp_path, monkeypatch):
         return real_open(fp, *a, **kw)
 
     monkeypatch.setattr(lake, "open", counting_open, raising=False)
-    got = lake.scan_table(spark, path, ranges={"k": (120, 180)})
+    got = lake.scan_table(spark, path, where=("between", "k", 120, 180))
     assert len(opened) == 1, f"expected 1 slab decoded, opened {opened}"
     monkeypatch.delattr(lake, "open", raising=False)
     assert {r.k for r in got.collect()} == set(range(120, 181))
@@ -1376,7 +1408,7 @@ def test_delete_keys_merge_on_read_sequence_semantics(spark, tmp_path):
     assert 15 not in got3
 
     # pruned reader scan applies pending deletes too
-    rng = lake.scan_table(spark, path, ranges={"k": (0, 50)})
+    rng = lake.scan_table(spark, path, where=("between", "k", 0, 50))
     assert {r.k for r in rng.collect()} == {
         k for k in range(51) if not 10 <= k <= 20
     }
@@ -1650,8 +1682,8 @@ def test_branch_creation_errors(spark, tmp_path):
 
 
 def test_scan_table_null_pruning(spark, tmp_path):
-    """nulls={col: bool} prunes at file level from recorded null
-    counts and stays exact via the residual filter."""
+    """isnull/notnull leaves prune at file level from recorded null
+    counts and stay exact via the residual filter."""
     path = str(tmp_path / "t")
     df = spark.range(100).select(
         F.col("id").alias("k"),
@@ -1661,19 +1693,22 @@ def test_scan_table_null_pruning(spark, tmp_path):
     lake.write_table(df, path, partition_by="p")
     full = lake.read_table(spark, path)
     n_full = len(set(full.inputFiles()))
-    isnull = lake.scan_table(spark, path, nulls={"v": True})
-    notnull = lake.scan_table(spark, path, nulls={"v": False})
+    isnull = lake.scan_table(spark, path, where=("isnull", "v"))
+    notnull = lake.scan_table(spark, path, where=("notnull", "v"))
     assert 0 < len(set(isnull.inputFiles())) < n_full
     assert 0 < len(set(notnull.inputFiles())) < n_full
     assert {r.k for r in isnull.collect()} == set(range(1, 100, 2))
     assert {r.k for r in notnull.collect()} == set(range(0, 100, 2))
     # a column with no nulls anywhere: IS NULL prunes to zero files
-    empty = lake.scan_table(spark, path, nulls={"k": True})
+    empty = lake.scan_table(spark, path, where=("isnull", "k"))
     assert empty.count() == 0
     # composes with partition + range pruning
     mix = lake.scan_table(
-        spark, path, partitions={"p": 0}, ranges={"k": (10, 40)},
-        nulls={"v": False},
+        spark, path,
+        where=(
+            "and", ("in", "p", [0]), ("between", "k", 10, 40),
+            ("notnull", "v"),
+        ),
     )
     assert {r.k for r in mix.collect()} == set(range(10, 41, 2))
 
@@ -2045,8 +2080,8 @@ def test_commit_detects_graceless_vacuum_collecting_its_files(
 
 
 def test_scan_table_partitions_ambiguous_string_value(spark, tmp_path):
-    """partitions= pruning must honor the same _norm_part_val ambiguity
-    fallback as the predicate algebra: a STRING partition recorded as
+    """Partition-leaf pruning must honor the _norm_part_val ambiguity
+    fallback: a STRING partition recorded as
     '001' matches a request for integer 1 (the residual isin([1])
     matches it after Spark's implicit cast), so pruning it would break
     scan_table ≡ read_table().filter()."""
@@ -2055,7 +2090,7 @@ def test_scan_table_partitions_ambiguous_string_value(spark, tmp_path):
         [(1, "001"), (2, "001"), (3, "2")], "k long, p string"
     )
     lake.write_table(df, path, partition_by="p")
-    got = lake.scan_table(spark, path, partitions={"p": 1})
+    got = lake.scan_table(spark, path, where=("in", "p", [1]))
     want = {
         r.k
         for r in lake.read_table(spark, path)
@@ -2065,7 +2100,7 @@ def test_scan_table_partitions_ambiguous_string_value(spark, tmp_path):
     assert {r.k for r in got.collect()} == want
     assert want == {1, 2}, "residual cast matches '001'"
     # exact-string requests still prune: only the '2' file survives p='2'
-    got2 = lake.scan_table(spark, path, partitions={"p": "2"})
+    got2 = lake.scan_table(spark, path, where=("in", "p", ["2"]))
     assert {r.k for r in got2.collect()} == {3}
     assert len(set(got2.inputFiles())) < len(
         set(lake.read_table(spark, path).inputFiles())
@@ -2408,7 +2443,7 @@ def test_rename_partition_column_prunes_by_new_name(spark, tmp_path):
     lake.write_table(df, path, partition_by=["grp"])
     lake.rename_columns(spark, path, {"grp": "bucket"})
     all_files = set(lake.data_files(path, 1))
-    pruned = lake.scan_table(spark, path, partitions={"bucket": "A"})
+    pruned = lake.scan_table(spark, path, where=("in", "bucket", ["A"]))
     assert set(pruned.inputFiles()) < {
         "file://" + __import__("os").path.join(path, f) for f in all_files
     } or len(pruned.inputFiles()) < len(all_files)
@@ -3081,10 +3116,9 @@ def test_transform_scan_prunes_bucket_eq(spark, ttbl):
     full = lake.read_table(spark, ttbl)
     assert sc.count() == full.filter(F.col("u") == 3).count() > 0
     assert 0 < len(sc.inputFiles()) < len(full.inputFiles())
-    # partitions= knob routes through the same transform pruning
-    # (bucket-only — the where= path additionally prunes on u's
-    # min/max file stats, so it may keep strictly fewer files)
-    sc2 = lake.scan_table(spark, ttbl, partitions={"u": 3})
+    # an in leaf routes through the same transform pruning (and,
+    # like eq, also prunes on u's min/max file stats)
+    sc2 = lake.scan_table(spark, ttbl, where=("in", "u", [3]))
     assert sc2.count() == sc.count()
     assert len(sc.inputFiles()) <= len(sc2.inputFiles()) < len(
         full.inputFiles()

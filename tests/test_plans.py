@@ -206,7 +206,7 @@ def test_slab_pruned_scan_reads_only_matching_files(spark, sf001):
             [(k, k % 10) for k in range(1000)], "k long, p long"
         )
         lake.write_table(d.repartition(8), path, partition_by="p")
-        got = lake.scan_table(spark, path, partitions={"p": 4})
+        got = lake.scan_table(spark, path, where=("in", "p", [4]))
         files = set(got.inputFiles())
         assert files, "scan must read something"
         assert all("__pv_p=4" in f for f in files), (

@@ -2,10 +2,12 @@
 
 Round 14's file-level stats pruning refuted files on a SINGLE merge
 key only; multi-key upserts on unpartitioned tables rewrote everything
-even when the leading key's range could refute most files. Round 15's
-`_m_stats_split_keys` prunes on the CONJUNCTION of per-key ranges — a
-match equates ALL keys, so ANY key's [min,max] missing the update
-set's range refutes the file.
+even when the leading key's range could refute most files. Round 15
+prunes on the CONJUNCTION of per-key ranges — a match equates ALL
+keys, so ANY key's [min,max] missing the update set's range refutes
+the file. The planner expresses it as the predicate spec
+`("and", ("between", k, lo, hi), …)` (`lakehouse._m_key_range_pred`),
+compiled by the same `_pred_compile` that prunes scans and deletes.
 
 Fixture: 1M rows / 8 files range-clustered on the LEADING key k1 (k2
 is a short cycle — every file covers its full range, so only k1 can
