@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from spype_spark.queries._util import TS_FMT_SPARK
 from spype_spark.session import ensure_session_confs
-from spype_spark.tables import normalize_events_ts
+from spype_spark.tables import _read_parquet, normalize_events_ts
 
 
 def _events_batch(spark: SparkSession, path: str) -> DataFrame:
@@ -60,13 +60,19 @@ def _events_stream(
     (live-ingest landing dirs). Sniffing instead of hardcoding keeps the
     stream reader correct across corpus encodings; a hardcoded ``ts
     long`` schema against µs data silently yields NULL timestamps (the
-    worst failure mode: wrong, not loud).
+    worst failure mode: wrong, not loud). When ``glob`` names one
+    existing file (the default), the sniff shares the batch loader's
+    memoized schema, so a repeat run launches no inference job.
     """
     ensure_session_confs(spark)
     if schema is None:
-        schema = (
-            spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
-        )
+        one_file = os.path.join(sf_dir, glob)
+        if os.path.isfile(one_file):
+            schema = _read_parquet(spark, one_file).schema
+        else:
+            schema = (
+                spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
+            )
     # FileStreamSource tails a *directory*; glob-filter to the events file.
     reader = (
         spark.readStream.schema(schema)

@@ -6,7 +6,11 @@ The corpus is a TPC-H-ish star schema plus an ``events`` stream table,
 Scale notes (100 TB): each table here is a single Parquet file; on a
 cluster these become partitioned directories (e.g. lineitem partitioned
 by ship month) and the *same* ``spark.read.parquet`` call picks up
-partition pruning automatically. Column pruning + predicate pushdown are
+partition pruning automatically. A ``spark.read.parquet`` open runs one
+footer-reading schema-inference job; :func:`load_table` memoizes the
+inferred schema (never data or a DataFrame) of a local file, so a
+reopen of an unchanged file runs none. A directory bypasses the memo:
+there one footer job is noise next to the scan. Column pruning + predicate pushdown are
 preserved because loaders return raw scans (no caching, no forced
 materialization) — every query composes filters/projections directly
 onto the scan node so Catalyst can push them into the Parquet reader.
@@ -17,8 +21,12 @@ no-op when the corpus already stores native µs timestamps.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from spype_spark.session import ensure_session_confs
 
@@ -70,14 +78,76 @@ def normalize_events_ts(df: DataFrame, target: str = "timestamp_ntz") -> DataFra
     return df.withColumn("ts", ts)
 
 
+#: Schema Spark inferred for a local Parquet file, keyed by
+#: :func:`_schema_key`.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+#: The confs Spark 4.1.2's ``ParquetToSparkSchemaConverter`` reads: the
+#: inputs, besides the file footer, of an inferred Parquet schema.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """File identity plus the explicitly set schema-conversion confs, or
+    None when ``path`` is not a local regular file (a directory, a
+    non-local URI, a missing path)."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    # one get per conf: spark.conf.getAll costs a py4j round trip per
+    # set entry (~28 ms for 29 entries, 4-core host), more than a
+    # memoized open costs
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    return (real, *ident, confs)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the inferred schema of an
+    unchanged local file so the open launches no inference job."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key) if key else None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key:
+        _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table as a DataFrame.
 
     ``events.ts`` is normalized to ``timestamp_ntz`` whatever the
     on-disk encoding (see :func:`normalize_events_ts`).
+
+    The first open of a file runs Spark's own schema inference (one
+    job); the inferred schema is memoized under the file's identity —
+    real path, device, inode, size, mtime and ctime — plus the
+    explicitly set values of the confs Spark's Parquet schema conversion
+    reads (``binaryAsString``, ``nanosAsLong``, ``caseSensitive``, …;
+    see ``_SCHEMA_CONFS``). A reopen with the same key passes that
+    schema to the reader and launches no job; a rewritten file or a
+    changed conf infers again. Only the schema is memoized: each call
+    returns a new relation with fresh attribute ids, so self-joins stay
+    unambiguous. A directory, a non-local URI or a missing path bypasses
+    the memo.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     return df

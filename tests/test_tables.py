@@ -6,6 +6,10 @@ branching on the loaded dtype (normalize_events_ts).
 """
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from spype_spark.tables import BROADCAST_DIMS, TABLES, load_table, load_tables
@@ -86,3 +90,83 @@ def test_events_stream_reader_matches_batch_loader(spark, sf_dir):
 def test_broadcast_dims_are_small(spark, sf_dir):
     for name in BROADCAST_DIMS:
         assert load_table(spark, sf_dir, name).count() <= 20_000
+
+
+def test_reopen_of_unchanged_file_launches_no_job(spark, sf_dir):
+    """The second open of an unchanged file reuses the memoized inferred
+    schema: no schema-inference job, the same schema."""
+    first = load_table(spark, sf_dir, "lineitem").schema
+    sc = spark.sparkContext
+    sc.setJobGroup("test_reopen_no_job", "reopen of an unchanged file")
+    try:
+        again = load_table(spark, sf_dir, "lineitem").schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test_reopen_no_job")) == []
+    assert again == first
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """Rewriting a file in place with other column types must not reuse
+    the old schema: the next open returns the new types and values."""
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32())}), path)
+    old = load_table(spark, str(tmp_path), "t")
+    assert old.schema["k"].dataType.simpleString() == "int"
+    assert sorted(r.k for r in old.collect()) == [1, 2]
+    pq.write_table(pa.table({"k": ["alpha", "beta", "gamma"]}), path)
+    new = load_table(spark, str(tmp_path), "t")
+    assert new.schema["k"].dataType.simpleString() == "string"
+    assert sorted(r.k for r in new.collect()) == ["alpha", "beta", "gamma"]
+
+
+def test_schema_memo_is_keyed_by_conversion_confs(spark, tmp_path):
+    """spark.sql.parquet.binaryAsString changes how an unannotated
+    binary column converts; flipping it between opens of one unchanged
+    file must change the loaded type."""
+    key = "spark.sql.parquet.binaryAsString"
+    pq.write_table(pa.table({"b": pa.array([b"x", b"y"], pa.binary())}),
+                   tmp_path / "bin.parquet")
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "false")
+        as_bin = load_table(spark, str(tmp_path), "bin").schema["b"].dataType
+        spark.conf.set(key, "true")
+        df = load_table(spark, str(tmp_path), "bin")
+        as_str = df.schema["b"].dataType
+        assert sorted(r.b for r in df.collect()) == ["x", "y"]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert as_bin.simpleString() == "binary"
+    assert as_str.simpleString() == "string"
+
+
+def test_two_opens_self_join_unambiguously(spark, sf_dir):
+    """Only the schema is memoized: two opens are separate relations
+    with fresh attribute ids, so a self-join resolves both sides."""
+    n1 = load_table(spark, sf_dir, "nation")
+    n2 = load_table(spark, sf_dir, "nation")
+    a, b = n1.alias("a"), n2.alias("b")
+    by_alias = a.join(b, F.col("a.n_regionkey") == F.col("b.n_regionkey"))
+    # unaliased attribute references: had both opens shared one
+    # relation, Spark would reject this condition as ambiguous
+    by_attr = n1.join(n2, n1.n_nationkey < n2.n_nationkey)
+    nation = f"read_parquet('{sf_dir}/nation.parquet')"
+    want_eq, want_lt = duckdb.sql(
+        f"SELECT count(*) FILTER (a.n_regionkey = b.n_regionkey), "
+        f"count(*) FILTER (a.n_nationkey < b.n_nationkey) "
+        f"FROM {nation} a, {nation} b"
+    ).fetchone()
+    assert by_alias.count() == want_eq
+    assert by_attr.count() == want_lt
+
+
+def test_missing_table_raises_spark_path_not_found(spark, sf_dir):
+    """A missing path bypasses the memo and fails in Spark, as before."""
+    with pytest.raises(AnalysisException) as e:
+        load_table(spark, sf_dir, "no_such_table")
+    assert e.value.getCondition() == "PATH_NOT_FOUND"
